@@ -737,7 +737,7 @@ def q_parse_metrics(spark, sf_dir):
     """Per-doc parse metrics: node count, parse errors, html byte size."""
     pages = pages_df(spark, sf_dir).withColumn(
         "n_chars_html", F.length("html"))
-    out = X.metrics_over(pages, keep_cols=("url", "n_chars_html"))
+    out = X.extract_pages(pages, keep_cols=("n_chars_html",), metrics=True)
     return out.select("url", "n_nodes", "parse_errors", "n_chars_html")
 
 

@@ -5,6 +5,8 @@ layer calls the same kernel per Arrow batch."""
 
 from __future__ import annotations
 
+import re
+
 from swiftsoup_spark.kernel.arena import Arena, Document, Element, ELEMENT
 from swiftsoup_spark.kernel.treebuilder import HtmlTreeBuilder
 from swiftsoup_spark.kernel.xmlbuilder import XmlTreeBuilder
@@ -79,23 +81,31 @@ def parse_body_fragment(html: str, base_uri: str = "") -> Document:
     return Document(arena, 0)
 
 
+_META_CHARSET = re.compile(
+    rb"""<meta[^>]+charset\s*=\s*["']?\s*([a-zA-Z0-9_\-]+)""", re.I)
+
+
 def decode_html(data: bytes) -> str:
     """Charset detection: BOM, then <meta charset>/http-equiv sniff in the
     first 1024 bytes, defaulting to UTF-8 (reference Document charset
     handling / DataUtil)."""
-    import re
     if data[:3] == b"\xef\xbb\xbf":
         return data[3:].decode("utf-8", "replace")
     if data[:2] in (b"\xff\xfe", b"\xfe\xff"):
         return data.decode("utf-16", "replace")
     head = data[:1024]
-    m = re.search(rb"""<meta[^>]+charset\s*=\s*["']?\s*([a-zA-Z0-9_\-]+)""", head, re.I)
+    m = _META_CHARSET.search(head)
     if m:
         enc = m.group(1).decode("ascii", "replace").lower()
-        try:
-            return data.decode(enc, "replace")
-        except LookupError:
-            pass
+        # idna/punycode are hostname codecs, not charsets: idna rejects
+        # the "replace" handler and punycode yields "" for ASCII input.
+        # Any label that fails to decode falls back to the default too,
+        # so one bad page cannot fail a job.
+        if enc not in ("idna", "punycode"):
+            try:
+                return data.decode(enc, "replace")
+            except (LookupError, ValueError):
+                pass
     return data.decode("utf-8", "replace")
 
 

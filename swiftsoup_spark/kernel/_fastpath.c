@@ -6335,7 +6335,8 @@ static int an_find_first(AB *ab, int want_tag, const uint8_t *idv,
     return found;
 }
 
-/* arena_doc_text(html, scope_id|None) -> (text, title) | None */
+/* arena_doc_text(html, scope_id|None)
+ *   -> (text, title, n_nodes, errors) | None */
 static PyObject *py_arena_doc_text(PyObject *self, PyObject *args) {
     const char *html, *scope = NULL;
     Py_ssize_t n, scope_len = 0;
@@ -6415,7 +6416,8 @@ static PyObject *py_arena_doc_text(PyObject *self, PyObject *args) {
                                             (Py_ssize_t)text.len, "strict");
         PyObject *io = PyUnicode_DecodeUTF8((const char *)title.d,
                                             (Py_ssize_t)title.len, "strict");
-        if (to && io) r = PyTuple_Pack(2, to, io);
+        if (to && io)
+            r = Py_BuildValue("(OOii)", to, io, ab->nn - 1, ab->errors);
         Py_XDECREF(to); Py_XDECREF(io);
     }
     PyMem_Free(text.d); PyMem_Free(title.d);
@@ -6655,7 +6657,8 @@ static PyMethodDef methods[] = {
     {"build_arena", py_build_arena, METH_VARARGS,
      "build_arena(html, track_spans) -> arena columns tuple | None"},
     {"arena_doc_text", py_arena_doc_text, METH_VARARGS,
-     "arena-built (text, title) for streaming-bail documents"},
+     "arena-built (text, title, n_nodes, errors) for streaming-bail\n"
+     "documents"},
     {NULL, NULL, 0, NULL}
 };
 

@@ -265,13 +265,15 @@ def doc_text(html: str, scope_id: str | None = None) -> tuple[str, str] | None:
         r = m.arena_doc_text(html, scope_id)
     if r is None:
         return None
-    text, title = r
+    text, title = r[0], r[1]
     return text, title if title is not None else ""
 
 
 def arena_doc_text(html: str, scope_id: str | None = None):
-    """(text, title) via the C arena builder only (the streaming-bail
-    fallback tier), or None -> full Python kernel."""
+    """(text, title, n_nodes, parse_errors) via the C arena builder
+    only (the streaming-bail fallback tier), or None -> full Python
+    kernel. ``n_nodes`` and ``parse_errors`` equal the Python kernel's
+    ``len(arena.parent) - 1`` and ``arena.errors``."""
     m = get_module()
     if m is None or not hasattr(m, "arena_doc_text"):
         return None
@@ -396,9 +398,10 @@ def batch_doc_text(col, scope_id: str | None = None):
     Returns ``(text_array, title_array, bail_indices)`` where the arrays
     are Arrow string arrays built directly from C-produced buffers (no
     per-row Python objects), or ``None`` if the native module is
-    unavailable / the batch shape is unsupported — callers then use the
-    per-row path. Rows listed in ``bail_indices`` hold empty strings and
-    must be recomputed with the Python kernel.
+    unavailable / the batch shape is unsupported (non-string type,
+    nulls) — callers then take the per-document tiers. Rows listed in
+    ``bail_indices`` hold empty strings and must be recomputed by a
+    later tier.
     """
     import pyarrow as pa
 

@@ -129,9 +129,13 @@ def bpe_encode(df, n_merges: int = 3, text_col: str = "text",
 
 def _train_ctes(n_merges: int, text_expr: str, table: str) -> str:
     """The shared WITH-chain of the DuckDB replay: word counts ->
-    v1..v{n+1} states with per-round argmax CTEs t1..tn."""
+    v1..v{n+1} states with per-round argmax CTEs t1..tn.
+
+    Every CTE is ``MATERIALIZED``: ``v{r+1}`` reads ``v{r}`` once
+    directly and twice through ``t{r}``, so an inlined chain grows
+    exponentially with the merge count (~10 min at 8 merges)."""
     parts = [f"""
-WITH v1 AS (
+WITH v1 AS MATERIALIZED (
   SELECT ',,' || regexp_replace(w, '(.)', '\\1,,', 'g') AS s, cnt FROM (
     SELECT w, count(*) AS cnt FROM (
       SELECT unnest(string_split_regex(lower({text_expr}), '[^a-z]+')) AS w
@@ -140,7 +144,7 @@ WITH v1 AS (
 )"""]
     for r in range(1, n_merges + 1):
         parts.append(f""",
-p{r} AS (
+p{r} AS MATERIALIZED (
   SELECT pair, sum(cnt) AS pc FROM (
     SELECT unnest(list_transform(generate_series(1, len(arr) - 1),
                   i -> arr[i] || ' ' || arr[i + 1])) AS pair, cnt
@@ -148,8 +152,9 @@ p{r} AS (
                  cnt FROM v{r}) a) e
   GROUP BY pair
 ),
-t{r} AS (SELECT pair, pc FROM p{r} ORDER BY pc DESC, pair LIMIT 1),
-v{r + 1} AS (
+t{r} AS MATERIALIZED (
+  SELECT pair, pc FROM p{r} ORDER BY pc DESC, pair LIMIT 1),
+v{r + 1} AS MATERIALIZED (
   SELECT replace(s, ',' || replace((SELECT pair FROM t{r}), ' ', ',,')
                  || ',',
                  ',' || replace((SELECT pair FROM t{r}), ' ', '') || ',')

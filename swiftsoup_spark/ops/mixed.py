@@ -8,9 +8,9 @@ one ``mapInArrow`` stage:
   * payload starts with ``%PDF-``  -> the from-scratch PDF extractor
     (``ops.pdftext``; documented bails surface as NULL text)
   * anything else -> charset-aware decode (``api.decode_html``: BOM +
-    ``<meta charset>`` sniff) + the two-tier C HTML extractor
-    (streaming -> C arena walk) with the byte-identical Python kernel
-    as final fallback
+    ``<meta charset>`` sniff) and ``extract_pages``' tier policy over
+    the batch's HTML documents (C streaming, then the C arena walk,
+    then the byte-identical Python kernel)
 
 Scale shape: routing is a per-document branch inside the same fused
 Scan -> MapInArrow stage every other extractor uses — no shuffle, no
@@ -38,28 +38,22 @@ def extract_any_over(df, payload_col: str = "payload",
     out_names = [f.name for f in out_schema.fields]
 
     def batches(it):
-        from swiftsoup_spark.api import decode_html
-        from swiftsoup_spark.kernel.fastpath import doc_text
-        from swiftsoup_spark.kernel.treebuilder import HtmlTreeBuilder
         from swiftsoup_spark.ops.pdftext import extract_pdf_text_bytes
+        from swiftsoup_spark.spark.extract import _extract_column
 
-        tb = HtmlTreeBuilder()
         for batch in it:
-            fmts, texts = [], []
-            for raw in batch.column(payload_col):
-                b = raw.as_py()
-                if b is None:
-                    fmts.append(None)
-                    texts.append(None)
-                elif b.startswith(b"%PDF-"):
-                    fmts.append("pdf")
-                    texts.append(extract_pdf_text_bytes(b))
-                else:
-                    fmts.append("html")
-                    s = decode_html(b)
-                    r = doc_text(s)  # two C tiers; None -> Python kernel
-                    texts.append(r[0] if r is not None
-                                 else tb.parse(s).node_text(0))
+            payloads = batch.column(payload_col).to_pylist()
+            fmts = [None if b is None else
+                    "pdf" if b.startswith(b"%PDF-") else "html"
+                    for b in payloads]
+            texts = [extract_pdf_text_bytes(b) if f == "pdf" else None
+                     for b, f in zip(payloads, fmts)]
+            html_idx = [i for i, f in enumerate(fmts) if f == "html"]
+            if html_idx:
+                html = pa.array([payloads[i] for i in html_idx], pa.binary())
+                for i, t in zip(html_idx,
+                                _extract_column(html)[0].to_pylist()):
+                    texts[i] = t
             yield pa.RecordBatch.from_arrays(
                 [batch.column(nm) for nm in keep_names]
                 + [pa.array(fmts, pa.string()), pa.array(texts, pa.string())],

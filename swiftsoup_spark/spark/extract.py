@@ -13,7 +13,7 @@ string -> broadcast by closure -> compiled lazily and cached by
 ``parse_query``'s LRU), mirroring the reference's QueryParser cache.
 """
 
-from pyspark.sql import functions as F, types as T
+from pyspark.sql import types as T
 
 SPAN_SCHEMA = T.ArrayType(T.StructType([
     T.StructField("node", T.IntegerType()),
@@ -159,18 +159,71 @@ def clean_over(df, whitelist: str = "basic", out_col: str = "clean_html",
                         in_col=in_col, keep_cols=keep_cols)
 
 
-def metrics_over(df, in_col: str = "html", keep_cols=("url",)):
-    """-> (keep_cols..., n_nodes, parse_errors) exact parse metrics
-    (full DOM build; no fast path by construction)."""
-    def row(tb, s):
-        arena = fast_parse(tb, s)
-        return (len(arena.parent) - 1, arena.errors)
+def _extract_column(html, css_scope: str | None = None,
+                    metrics: bool = False) -> list:
+    """The one tier policy of the text operators: an Arrow ``html``
+    column -> ``[text, title]`` Arrow arrays, plus ``[n_nodes,
+    parse_errors]`` when ``metrics`` is set.
 
-    return apply_kernel(
-        df, row,
-        [T.StructField("n_nodes", T.IntegerType()),
-         T.StructField("parse_errors", T.IntegerType())],
-        in_col=in_col, keep_cols=keep_cols)
+    Binary html is charset-decoded (``api.decode_html``) and null read
+    as "" once, into a string array. With no scope or a simple ``#id``
+    scope, tier 1 is the C streaming extractor over the whole batch's
+    Arrow buffers (``fastpath.batch_doc_text``). A document it refuses
+    goes to tier 2, the C arena (``fastpath.arena_doc_text``); every
+    document does when ``metrics`` is set, since tier 1 counts no
+    nodes. Only a tier-2 bail reaches the Python tree builder. Any
+    other scope builds the DOM with :func:`fast_parse` and runs the
+    selector. Every tier gives byte-identical output
+    (tests/test_fastpath.py, tests/test_arena_build.py). Layer
+    functions are looked up through their modules on each call, so
+    wrappers patched onto those modules see every call.
+    """
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from swiftsoup_spark.kernel import fastpath
+    from swiftsoup_spark.kernel.arena import Document
+    from swiftsoup_spark.kernel.treebuilder import HtmlTreeBuilder
+    from swiftsoup_spark.select import engine
+
+    if html.null_count or not (pa.types.is_string(html.type)
+                               or pa.types.is_large_string(html.type)):
+        html = pa.array([_to_str(v) for v in html.to_pylist()], pa.string())
+    scope_id = fastpath.scope_to_id(css_scope)
+    c_scope = not css_scope or scope_id is not None
+    todo, tier1 = range(len(html)), None
+    if c_scope and not metrics:
+        br = fastpath.batch_doc_text(html, scope_id)
+        if br is not None:
+            tier1, todo = br[:2], br[2]
+            if not todo:
+                return list(tier1)
+    cols = [], [], [], []
+    tb = HtmlTreeBuilder(track_spans=False)
+    for i in todo:
+        s = html[i].as_py()
+        r = fastpath.arena_doc_text(s, scope_id) if c_scope else None
+        if r is None:
+            arena = tb.parse(s) if c_scope else fast_parse(tb, s)
+            if css_scope:
+                m = engine.select(arena, 0, css_scope)
+                text = arena.node_text(m[0]) if m else ""
+            else:
+                text = arena.node_text(0)
+            r = (text, Document(arena, 0).title(), len(arena.parent) - 1,
+                 arena.errors)
+        for col, v in zip(cols, r):
+            col.append(v)
+    out = [pa.array(cols[0], pa.string()), pa.array(cols[1], pa.string())]
+    if tier1 is not None:
+        # splice the later tiers' rows into tier 1's C-built arrays
+        mask = [False] * len(html)
+        for i in todo:
+            mask[i] = True
+        mask = pa.array(mask, pa.bool_())
+        return [pc.replace_with_mask(a, mask, b) for a, b in zip(tier1, out)]
+    if metrics:
+        out += [pa.array(cols[2], pa.int32()), pa.array(cols[3], pa.int32())]
+    return out
 
 
 def extract_pages(pages_df, css_scope: str | None = None, keep_cols: tuple = (),
@@ -178,25 +231,16 @@ def extract_pages(pages_df, css_scope: str | None = None, keep_cols: tuple = (),
     """pages(url, html, ...) -> (url, *keep_cols, text, title[, n_nodes,
     parse_errors]).
 
-    Hot path: ``mapInArrow`` — the kernel reads/writes pyarrow arrays
-    directly (measured ~2× the throughput of the pandas_udf path; pandas
-    Series materialization of megabyte string columns is pure overhead).
-    One fused stage pipelined with the scan, no shuffle; Catalyst prunes
-    the scan to (url, html, *keep_cols).
-
-    When ``metrics`` is False and ``css_scope`` is None or a simple
-    ``#id`` selector (the boilerplate-strip shape), each document
-    first tries the compiled C streaming extractor
-    (kernel/fastpath.doc_text, ~30× the Python kernel) and falls back to
-    the full Python parse per-document on bail-out — output is
-    byte-identical either way (tests/test_fastpath.py). ``metrics=True``
-    adds exact (n_nodes, parse_errors) columns, which require the full
-    DOM build, so every document takes the Python kernel (used by the
-    resumable pipeline for lineage manifests).
+    One ``mapInArrow`` stage pipelined with the scan, no shuffle; the
+    kernel reads and writes pyarrow arrays directly (measured ~2x the
+    throughput of the pandas_udf path) and Catalyst prunes the scan to
+    (url, html, *keep_cols). Each batch goes through
+    :func:`_extract_column`: the C streaming tier, then the C arena
+    tier per refused document, then the Python kernel only where both
+    bail. ``metrics=True`` adds exact (n_nodes, parse_errors) columns
+    (used by the resumable pipeline's lineage manifests); they come
+    from the C arena tier, so each document starts there.
     """
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
     src = pages_df.select("url", *keep_cols, "html")
     keep_fields = [f for f in src.schema.fields if f.name != "html"]
     out_fields = keep_fields + [
@@ -210,70 +254,10 @@ def extract_pages(pages_df, css_scope: str | None = None, keep_cols: tuple = (),
     out_names = [f.name for f in out_fields]
 
     def batches(it):
-        from swiftsoup_spark.kernel.treebuilder import HtmlTreeBuilder
-        from swiftsoup_spark.kernel.arena import Document
-        from swiftsoup_spark.select.engine import select as sel
-        from swiftsoup_spark.kernel.fastpath import (
-            arena_doc_text, batch_doc_text, doc_text, scope_to_id)
-
-        scope_id = scope_to_id(css_scope)
-        use_fast = (css_scope is None or scope_id is not None) and not metrics
-        tb = HtmlTreeBuilder(track_spans=False)
+        import pyarrow as pa
         for batch in it:
-            htmls = batch.column("html")
-            if use_fast:
-                # zero-copy batch over the Arrow utf8 buffers: no per-row
-                # Python strings on input, C-built Arrow buffers on output
-                br = batch_doc_text(htmls, scope_id)
-                if br is not None:
-                    text_arr, title_arr, bail_idx = br
-                    if bail_idx:
-                        texts = text_arr.to_pylist()
-                        titles = title_arr.to_pylist()
-                        for i in bail_idx:
-                            s = _to_str(htmls[i].as_py())
-                            # tier 2: C arena build + C node_text walk
-                            r2 = arena_doc_text(s, scope_id)
-                            if r2 is not None:
-                                texts[i], titles[i] = r2
-                                continue
-                            arena = tb.parse(s)
-                            if css_scope:
-                                mm = sel(arena, 0, css_scope)
-                                texts[i] = arena.node_text(mm[0]) if mm else ""
-                            else:
-                                texts[i] = arena.node_text(0)
-                            titles[i] = Document(arena, 0).title()
-                        text_arr = pa.array(texts, pa.string())
-                        title_arr = pa.array(titles, pa.string())
-                    arrays = [batch.column(nm) for nm in keep_names] + [
-                        text_arr, title_arr]
-                    yield pa.RecordBatch.from_arrays(arrays, out_names)
-                    continue
-            texts, titles, nodes, errs = [], [], [], []
-            for raw in htmls:
-                s = _to_str(raw.as_py())
-                if use_fast:
-                    r = doc_text(s, scope_id)
-                    if r is not None:
-                        texts.append(r[0])
-                        titles.append(r[1])
-                        continue
-                arena = tb.parse(s)
-                if css_scope:
-                    m = sel(arena, 0, css_scope)
-                    texts.append(arena.node_text(m[0]) if m else "")
-                else:
-                    texts.append(arena.node_text(0))
-                titles.append(Document(arena, 0).title())
-                if metrics:
-                    nodes.append(len(arena.parent) - 1)
-                    errs.append(arena.errors)
-            arrays = [batch.column(n) for n in keep_names] + [
-                pa.array(texts, pa.string()), pa.array(titles, pa.string())]
-            if metrics:
-                arrays += [pa.array(nodes, pa.int32()),
-                           pa.array(errs, pa.int32())]
+            arrays = [batch.column(nm) for nm in keep_names] + _extract_column(
+                batch.column("html"), css_scope, metrics)
             yield pa.RecordBatch.from_arrays(arrays, out_names)
 
     return src.mapInArrow(batches, out_schema)

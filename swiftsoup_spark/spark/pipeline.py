@@ -125,7 +125,8 @@ def run_extraction(spark, pages_df, out_dir: str, n_buckets: int = 32,
         todo = todo.repartition(n_buckets * salt, "bucket",
                                 F.pmod(F.xxhash64("url", F.lit(1)), F.lit(salt)))
     # metrics=True: the lineage manifest wants exact (n_nodes,
-    # parse_errors), which need the full DOM build
+    # parse_errors); the C arena tier counts them, so each document
+    # starts at that tier (the Python kernel only where it bails)
     extracted = extract_pages(todo, css_scope, keep_cols=("bucket",),
                               metrics=True)
     out = extracted.select("bucket", "url", "text", "n_nodes", "parse_errors")

@@ -9,47 +9,27 @@ API::
 
 All functions are ``pandas_udf`` Series->Series kernels: one Python
 invocation per Arrow batch, never per row. ``html_text``/``html_title``
-route the whole batch through the C streaming extractor
-(``fastpath.batch_doc_text`` — the same zero-copy Arrow-buffer path
-``spark/extract.py`` uses) with per-document Python-kernel fallback on
-bail-out; the selector/clean functions run the full kernel per document
-inside the batch loop (selector compilation is LRU-cached per worker).
+take the batch through the same tier policy as ``extract_pages``
+(C streaming over the Arrow buffers, then the C arena, then the
+Python kernel per refused document); the selector/clean functions run
+the full kernel per document inside the batch loop (selector
+compilation is LRU-cached per worker).
 """
 
 import pandas as pd
 
 
 def _batch_text_title(series, which: int):
-    """Series[html] -> Series[text|title] via the batched C fast path.
-    ``which``: 0 = text, 1 = title."""
+    """Series[html] -> Series[text|title] through the text operators'
+    one tier policy (``extract._extract_column``). ``which``: 0 = text,
+    1 = title."""
     import pyarrow as pa
 
-    from swiftsoup_spark.kernel.fastpath import batch_doc_text, doc_text
+    from swiftsoup_spark.spark.extract import _extract_column
 
-    def slow(h):
-        from swiftsoup_spark.api import parse
-        h = h or ""
-        r = doc_text(h)
-        if r is not None:
-            return r[which]
-        d = parse(h)
-        return d.text() if which == 0 else d.title()
-
-    s = series.fillna("")
-    try:
-        arr = pa.Array.from_pandas(s, type=pa.string())
-    except pa.ArrowInvalid:
-        arr = None
-    if arr is not None:
-        br = batch_doc_text(arr)
-        if br is not None:
-            out_arr, bail_idx = br[which], br[2]
-            out = out_arr.to_pandas()
-            out.index = s.index
-            for i in bail_idx:
-                out.iat[i] = slow(s.iat[i])
-            return out
-    return pd.Series([slow(h) for h in s], index=s.index)
+    out = _extract_column(pa.Array.from_pandas(series))[which].to_pandas()
+    out.index = series.index
+    return out
 
 
 def register_sql_functions(spark):

@@ -308,7 +308,8 @@ def test_reference_fixture_docs():
 def _py_text_title(html):
     from swiftsoup_spark.kernel.arena import Document
     a = HtmlTreeBuilder(track_spans=False).parse(html)
-    return a.node_text(0), Document(a, 0).title()
+    return (a.node_text(0), Document(a, 0).title(), len(a.parent) - 1,
+            a.errors)
 
 
 def test_arena_doc_text_matches_kernel():
@@ -344,7 +345,7 @@ def test_arena_doc_text_scoped():
         a = HtmlTreeBuilder(track_spans=False).parse(html)
         mm = sel(a, 0, f"#{scope}")
         expected = a.node_text(mm[0]) if mm else ""
-        assert r[0] == expected, (html, scope)
+        assert r == (expected, *_py_text_title(html)[1:]), (html, scope)
 
 
 def test_arena_doc_text_fuzz():

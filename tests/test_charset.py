@@ -46,3 +46,16 @@ def test_invalid_bytes_replaced():
 def test_unknown_charset_falls_back():
     data = b'<meta charset="not-a-charset"><p>x</p>'
     assert "<p>x</p>" in decode_html(data)
+
+
+def test_idna_label_falls_back_to_utf8():
+    # the idna codec rejects the "replace" handler (UnicodeError)
+    data = '<meta charset="idna"><p>café</p>'.encode("utf-8")
+    assert decode_html(data) == data.decode("utf-8")
+
+
+def test_punycode_label_falls_back_to_utf8():
+    # punycode raises on non-ASCII bytes and yields "" for ASCII ones
+    for body in ("<p>café</p>", "<p>ascii</p>"):
+        data = ('<meta charset="punycode">' + body).encode("utf-8")
+        assert decode_html(data) == data.decode("utf-8")

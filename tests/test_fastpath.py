@@ -453,8 +453,8 @@ def test_oracle_corpus_bail_contract():
         "read_parquet('/root/testdata/sf0.001/documents.parquet')")
     corpora = {"primary": HTML_SQL}
     # 'charset' is excluded: its html column is BINARY (Spark-dialect
-    # encode/unhex) and routes through decode_html + the per-row C path,
-    # not the batch utf8 fast path this contract pins
+    # encode/unhex), which decode_html turns into a string column before
+    # it reaches the batch utf8 fast path this contract pins
     corpora.update({k: h for k, (h, _) in VARIANT_TEMPLATES.items()
                     if k != "charset"})
     expected_bail = {}

@@ -8,7 +8,8 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -67,16 +68,16 @@ def test_parallelism_determinism(tmp_path_factory):
 
     script = r"""
 import json, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, %r)
 from swiftsoup_spark.spark.session import get_spark
 from swiftsoup_spark.spark.pages import pages_df
 from swiftsoup_spark.spark import pipeline as P
 n, out = int(sys.argv[1]), sys.argv[2]
 spark = get_spark(master=f"local[{n}]", app=f"det{n}")
-pages = pages_df(spark, "%s")
+pages = pages_df(spark, %r)
 P.run_extraction(spark, pages, out, n_buckets=4)
 print(json.dumps(P.corpus_checksum(spark, out)))
-""" % SF_DIR
+""" % (ROOT, SF_DIR)
     results = []
     for n in (2, 8):
         out = str(tmp_path_factory.mktemp(f"det{n}"))
