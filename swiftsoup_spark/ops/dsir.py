@@ -11,7 +11,8 @@ Faithful pipeline shape, integer-exact arithmetic throughout:
    ``buckets`` buckets (the paper's 10^4-bucket bag-of-hashed-ngrams),
    via md5, the repo-wide stable hash.
 2. **Importance weight fit** — per-bucket log-likelihood ratio of the
-   target sample vs the raw pool with Laplace smoothing,
+   target sample vs the raw pool with Laplace smoothing over the
+   buckets seen in the fit sample,
    ``log p_target[b] - log p_raw[b]``, quantized to BIT-LENGTH logs:
    ``[bits(np+1) + bits(tn+1)] - [bits(nn+1) + bits(tp+1)]``
    (``bits(x)`` = base-2 digit count; same 1-bit log granularity as
@@ -127,7 +128,11 @@ def dsir_scores(df, target_mod: int = 10, buckets: int = 1024,
     """(doc_id, n_grams, score) for EVERY input document — the
     importance-weight pass without the resampling draw. One broadcast
     hash join (the ≤``buckets``-row model) + one doc-keyed aggregate;
-    document text never rides a shuffle."""
+    document text never rides a shuffle.
+
+    The model has rows only for buckets seen in the fit sample. A gram
+    whose bucket was unseen there scores 0 (neutral), not a smoothed
+    weight; :func:`dsir_sql` does the same through its LEFT JOIN."""
     model = F.broadcast(dsir_weights(df, target_mod, buckets,
                                      fit_sample_mod, text_col, id_col))
     g = hashed_gram_buckets(df, buckets, text_col, id_col)

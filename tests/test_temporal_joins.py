@@ -1,6 +1,5 @@
-"""As-of join (ops/asof) and bucketized range join (ops/rangejoin)."""
+"""As-of join (ops/asof): crawl-snapshot lookups."""
 
-import datetime
 import os
 import sys
 
@@ -32,39 +31,6 @@ def test_as_of_join_picks_latest_at_or_before(spark):
     assert ("w", 99) not in rows
     assert ("x", 50) not in rows               # unknown key
     assert len(rows) == 2
-
-
-def test_interval_join_overlap_and_bounds(spark):
-    from swiftsoup_spark.ops.rangejoin import interval_join_bucketed
-    ts = lambda s: datetime.datetime(2024, 1, 1) + datetime.timedelta(
-        seconds=s)
-    base = 1704067200
-    events = spark.createDataFrame(
-        [(0, ts(0)), (1, ts(5400)), (2, ts(7199)), (3, ts(7200)),
-         (4, ts(90000))],
-        "event_id long, ts timestamp")
-    iv = spark.createDataFrame(
-        [(0, base, base + 5400),            # [0, 90min]
-         (1, base + 3600, base + 7199),     # overlaps window 0
-         (2, base + 7200, base + 10800)],
-        "w_id long, start_ep long, end_ep long")
-    got = sorted((r.event_id, r.w_id)
-                 for r in interval_join_bucketed(events, iv).collect())
-    # e0 -> w0 only; e1 (=5400) -> w0 (inclusive end) AND w1;
-    # e2 (=7199) -> w1 inclusive end; e3 (=7200) -> w2 start; e4 -> none
-    assert got == [(0, 0), (1, 0), (1, 1), (2, 1), (3, 2)]
-
-
-def test_interval_join_no_nested_loop(spark):
-    """The bucketized plan must be an equi BroadcastHashJoin — never
-    BroadcastNestedLoopJoin / CartesianProduct (the naive BETWEEN
-    plan)."""
-    import __spark_entry__ as E
-    df = E.queries()["range_join"](spark, "/root/testdata/sf0.001")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    assert "CartesianProduct" not in plan
 
 
 def test_asof_partial_agg_no_window(spark):
