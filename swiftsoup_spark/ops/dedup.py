@@ -15,6 +15,8 @@ so a DuckDB oracle can replay signatures exactly.
 
 from pyspark.sql import functions as F
 
+from swiftsoup_spark.spark.worker import prelude
+
 K_MINHASH = 8
 N_BANDS = 4  # bands of 2 rows over the 8-hash signature
 
@@ -204,6 +206,7 @@ def simhash(df, text_col: str = "text"):
     src = df.select("doc_id", text_col)
 
     def batches(it):
+        prelude()
         import numpy as np
         import pyarrow.compute as pc
 

@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F, types as T
 
+from swiftsoup_spark.spark.worker import prelude
+
 __all__ = ["feed_items", "synth_feed_table", "FEED_XML_SQL"]
 
 # one shared SQL expression (Spark SQL == DuckDB dialect) rendering a
@@ -90,6 +92,7 @@ def feed_items(df, xml_col: str = "xml", keep_cols: tuple = ("doc_id",)):
     keep_names = [f.name for f in keep_fields]
 
     def batches(it):
+        prelude()
         from pyspark.sql.pandas.types import to_arrow_type
         from swiftsoup_spark.kernel.arena import Element
         from swiftsoup_spark.kernel.xmlbuilder import XmlTreeBuilder

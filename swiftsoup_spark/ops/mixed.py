@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
+from swiftsoup_spark.spark.worker import prelude
+
 
 def extract_any_over(df, payload_col: str = "payload",
                      keep_cols: tuple = ("url",)):
@@ -38,6 +40,7 @@ def extract_any_over(df, payload_col: str = "payload",
     out_names = [f.name for f in out_schema.fields]
 
     def batches(it):
+        prelude()
         from swiftsoup_spark.ops.pdftext import extract_pdf_text_bytes
         from swiftsoup_spark.spark.extract import _extract_column
 
@@ -80,6 +83,7 @@ def synthesize_mixed(df, html_col: str = "html", text_col: str = "text",
         + [T.StructField(out_col, T.BinaryType())])
 
     def batches(it):
+        prelude()
         for batch in it:
             ids = batch.column(id_col)
             htmls = batch.column(html_col)

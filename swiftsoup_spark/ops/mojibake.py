@@ -27,6 +27,8 @@ import re
 
 from pyspark.sql import types as T
 
+from swiftsoup_spark.spark.worker import prelude
+
 __all__ = ["fix_text", "repair_mojibake"]
 
 # chars CP1252 places in 0x80-0x9F (the non-Latin-1 continuation shadows)
@@ -89,6 +91,7 @@ def repair_mojibake(df, text_col: str = "text", out_col: str = "text_fixed",
     names = df.columns
 
     def batches(it):
+        prelude()
         for batch in it:
             fixed, flags = [], []
             for s in batch.column(text_col).to_pylist():

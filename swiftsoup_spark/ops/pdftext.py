@@ -44,6 +44,8 @@ from __future__ import annotations
 import re
 import zlib
 
+from swiftsoup_spark.spark.worker import prelude
+
 _WS = b" \t\r\n\f\0"
 _DELIM = b"()<>[]{}/%"
 
@@ -761,6 +763,7 @@ def synthesize_pdfs(df, text_col: str = "text", id_col: str = "doc_id",
     src = df.select(id_col, *keep, text_col)
 
     def batches(it):
+        prelude()
         for batch in it:
             ids = batch.column(id_col)
             texts = batch.column(text_col)
@@ -791,6 +794,7 @@ def extract_pdf_text(df, pdf_col: str = "pdf", id_col: str = "doc_id",
     src = df.select(id_col, *keep, pdf_col)
 
     def batches(it):
+        prelude()
         for batch in it:
             ids = batch.column(id_col)
             pdfs = batch.column(pdf_col)

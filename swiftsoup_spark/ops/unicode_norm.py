@@ -24,6 +24,8 @@ from __future__ import annotations
 import pyarrow as pa
 from pyspark.sql import types as T
 
+from swiftsoup_spark.spark.worker import prelude
+
 
 def nfc_normalize(df, key_col: str = "doc_id", text_col: str = "text"):
     """(key, text_nfc, changed): NFC-normalized text + did-it-change.
@@ -38,6 +40,7 @@ def nfc_normalize(df, key_col: str = "doc_id", text_col: str = "text"):
         T.StructField("changed", T.BooleanType())])
 
     def batches(it):
+        prelude()
         import unicodedata
 
         for batch in it:

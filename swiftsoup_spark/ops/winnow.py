@@ -45,6 +45,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from swiftsoup_spark.spark.worker import prelude
+
 __all__ = ["winnow_fingerprints", "winnow_pairs", "winnow_pairs_sql",
            "excise_shared_passages", "excise_shared_passages_sql"]
 
@@ -107,6 +109,7 @@ def winnow_fingerprints(df, k: int = 16, w: int = 8,
             .select(id_col, text_col))
 
     def batches(it):
+        prelude()
         import numpy as np
         import pyarrow.compute as pc
 

@@ -27,6 +27,8 @@ import gzip
 import io
 import zlib
 
+from swiftsoup_spark.spark.worker import prelude
+
 _CRLF2 = b"\r\n\r\n"
 
 
@@ -131,6 +133,7 @@ def warc_pages(archives_df, content_col: str = "content"):
     decompress/parse loop runs inside each Arrow batch; one archive row
     explodes to its record rows with no Spark-side explode."""
     def batches(it):
+        prelude()
         import pandas as pd
 
         for pdf in it:

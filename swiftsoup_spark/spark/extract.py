@@ -15,6 +15,8 @@ string -> broadcast by closure -> compiled lazily and cached by
 
 from pyspark.sql import types as T
 
+from swiftsoup_spark.spark.worker import prelude
+
 SPAN_SCHEMA = T.ArrayType(T.StructType([
     T.StructField("node", T.IntegerType()),
     T.StructField("start", T.LongType()),
@@ -64,6 +66,7 @@ def apply_kernel(df, row_fn, out_fields, in_col="html", keep_cols=("url",),
     out_names = [f.name for f in out_schema.fields]
 
     def batches(it):
+        prelude()
         from pyspark.sql.pandas.types import to_arrow_type
         from swiftsoup_spark.kernel.treebuilder import HtmlTreeBuilder
 
@@ -254,6 +257,7 @@ def extract_pages(pages_df, css_scope: str | None = None, keep_cols: tuple = (),
     out_names = [f.name for f in out_fields]
 
     def batches(it):
+        prelude()
         import pyarrow as pa
         for batch in it:
             arrays = [batch.column(nm) for nm in keep_names] + _extract_column(

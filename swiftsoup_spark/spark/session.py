@@ -18,7 +18,7 @@ def get_spark(master: str | None = None, app: str = "swiftsoup_spark",
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
-    n = shuffle_partitions or int(cpus) if cpus.isdigit() else 32
+    n = shuffle_partitions or (int(cpus) if cpus.isdigit() else 32)
     b = (
         SparkSession.builder.master(master)
         .appName(app)

@@ -7,8 +7,10 @@ API::
     SELECT html_select_text(html, 'div#main p') FROM pages
     SELECT html_clean(body, 'basic') FROM fragments
 
-All functions are ``pandas_udf`` Series->Series kernels: one Python
-invocation per Arrow batch, never per row. ``html_text``/``html_title``
+All functions are iterator ``pandas_udf`` kernels: one Python
+invocation per task, which first runs the worker prelude
+(``spark.worker.prelude``) and then maps each Arrow batch's Series,
+never a row at a time. ``html_text``/``html_title``
 take the batch through the same tier policy as ``extract_pages``
 (C streaming over the Arrow buffers, then the C arena, then the
 Python kernel per refused document); the selector/clean functions run
@@ -16,7 +18,11 @@ the full kernel per document inside the batch loop (selector
 compilation is LRU-cached per worker).
 """
 
+from typing import Iterator, Tuple
+
 import pandas as pd
+
+from swiftsoup_spark.spark.worker import prelude
 
 
 def _batch_text_title(series, which: int):
@@ -37,34 +43,47 @@ def register_sql_functions(spark):
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf(T.StringType())
-    def html_text(html: pd.Series) -> pd.Series:
-        return _batch_text_title(html, 0)
+    def html_text(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        prelude()
+        for html in batches:
+            yield _batch_text_title(html, 0)
 
     @pandas_udf(T.StringType())
-    def html_title(html: pd.Series) -> pd.Series:
-        return _batch_text_title(html, 1)
+    def html_title(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        prelude()
+        for html in batches:
+            yield _batch_text_title(html, 1)
 
     @pandas_udf(T.ArrayType(T.StringType()))
-    def html_select_text(html: pd.Series, css: pd.Series) -> pd.Series:
+    def html_select_text(batches: Iterator[Tuple[pd.Series, pd.Series]]
+                         ) -> Iterator[pd.Series]:
+        prelude()
         from swiftsoup_spark.api import parse
-        return pd.Series(
-            [[el.text() for el in parse(h or "").select(c or "*")]
-             for h, c in zip(html, css)], index=html.index)
+        for html, css in batches:
+            yield pd.Series(
+                [[el.text() for el in parse(h or "").select(c or "*")]
+                 for h, c in zip(html, css)], index=html.index)
 
     @pandas_udf(T.ArrayType(T.StringType()))
-    def html_select_attr(html: pd.Series, css: pd.Series,
-                         attr: pd.Series) -> pd.Series:
+    def html_select_attr(
+            batches: Iterator[Tuple[pd.Series, pd.Series, pd.Series]]
+    ) -> Iterator[pd.Series]:
+        prelude()
         from swiftsoup_spark.api import parse
-        return pd.Series(
-            [[el.attr(a) for el in parse(h or "").select(c or "*")]
-             for h, c, a in zip(html, css, attr)], index=html.index)
+        for html, css, attr in batches:
+            yield pd.Series(
+                [[el.attr(a) for el in parse(h or "").select(c or "*")]
+                 for h, c, a in zip(html, css, attr)], index=html.index)
 
     @pandas_udf(T.StringType())
-    def html_clean(html: pd.Series, whitelist: pd.Series) -> pd.Series:
+    def html_clean(batches: Iterator[Tuple[pd.Series, pd.Series]]
+                   ) -> Iterator[pd.Series]:
+        prelude()
         from swiftsoup_spark.clean.cleaner import clean_html
-        return pd.Series(
-            [clean_html(h or "", w or "basic")
-             for h, w in zip(html, whitelist)], index=html.index)
+        for html, whitelist in batches:
+            yield pd.Series(
+                [clean_html(h or "", w or "basic")
+                 for h, w in zip(html, whitelist)], index=html.index)
 
     udfs = {"html_text": html_text, "html_title": html_title,
             "html_select_text": html_select_text,

@@ -18,6 +18,8 @@ bulk of duplicates before they hit storage)."""
 
 from __future__ import annotations
 
+from swiftsoup_spark.spark.worker import prelude
+
 
 def dedup_stream(df, text_col: str = "text", n_state_buckets: int = 64,
                  max_fps_per_bucket: int = 1_000_000):
@@ -40,6 +42,7 @@ def dedup_stream(df, text_col: str = "text", n_state_buckets: int = 64,
     out_cols = [f.name for f in out_schema.fields]
 
     def dedup_group(key, pdf_iter, state):
+        prelude()
         seen = set(state.get[0]) if state.exists else set()
         saturated = len(seen) >= max_fps_per_bucket
         for pdf in pdf_iter:

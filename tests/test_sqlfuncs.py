@@ -35,9 +35,10 @@ def test_html_text_matches_extract_pages(spark):
 
 
 def test_sqlfuncs_are_batch_pandas_udfs(spark):
-    """The SQL functions must be Series->Series pandas_udfs (one Python
-    call per Arrow batch): ArrowEvalPython in the physical plan AND one
-    kernel invocation for many rows — not a per-row scalar UDF."""
+    """The SQL functions must be iterator pandas_udfs (one Python call
+    per task, which runs the worker prelude once, then one Series per
+    Arrow batch): ArrowEvalPython in the physical plan AND one kernel
+    invocation for many rows — not a per-row scalar UDF."""
     from pyspark.sql import functions as F
     from swiftsoup_spark.spark.pages import pages_df
 
@@ -47,15 +48,16 @@ def test_sqlfuncs_are_batch_pandas_udfs(spark):
             ._jdf.queryExecution().executedPlan().toString())
     assert "ArrowEvalPython" in plan
 
-    # eval-type proof: every registered function is a Series->Series
-    # pandas_udf (SQL_SCALAR_PANDAS_UDF), not a per-row scalar UDF
+    # eval-type proof: every registered function is an
+    # Iterator[Series]->Iterator[Series] pandas_udf
+    # (SQL_SCALAR_PANDAS_ITER_UDF), not a per-row scalar UDF
     from pyspark.util import PythonEvalType
     from swiftsoup_spark.spark.sqlfuncs import register_sql_functions
     udfs = register_sql_functions(spark)
     assert set(udfs) == {"html_text", "html_title", "html_select_text",
                          "html_select_attr", "html_clean"}
     for name, fn in udfs.items():
-        assert fn.evalType == PythonEvalType.SQL_SCALAR_PANDAS_UDF, name
+        assert fn.evalType == PythonEvalType.SQL_SCALAR_PANDAS_ITER_UDF, name
 
 
 def test_html_select_and_clean(spark):
