@@ -6103,21 +6103,16 @@ fail:
     return result;
 }
 
-/* build_arena(html: str, track_spans: int) -> tuple | None (bail) */
-static PyObject *py_build_arena(PyObject *self, PyObject *args) {
-    const char *html;
-    Py_ssize_t n;
-    int track_spans, fragment_body = 0;
-    if (!PyArg_ParseTuple(args, "s#i|i", &html, &n, &track_spans,
-                          &fragment_body))
-        return NULL;
-    if (!g_ready || !g_pyids_ready) Py_RETURN_NONE;
-    if (memchr(html, 0, (size_t)n) != NULL)
-        Py_RETURN_NONE;   /* NUL handling -> Python kernel */
-
-    AB stack_ab;
-    AB *ab = &stack_ab;
+/* Tokenize and tree-build ``html`` into ``ab``: the one parse loop of
+ * every arena entry point. Returns 1 with the arena built (the caller
+ * then owns it and calls ab_free), or 0 on a bail (NUL bytes, builder
+ * bail, runaway loop guard, error) with ``ab`` already freed and any
+ * Python error cleared. */
+static int ab_build(AB *ab, const char *html, Py_ssize_t n, int track_spans,
+                    int fragment_body) {
     memset(ab, 0, sizeof(AB));
+    if (memchr(html, 0, (size_t)n) != NULL)
+        return 0;   /* NUL handling -> Python kernel */
     ab->s = (const uint8_t *)html;
     ab->n = n;
     ab->head_el = -1;
@@ -6129,19 +6124,19 @@ static PyObject *py_build_arena(PyObject *self, PyObject *args) {
     ab->fragment_body = fragment_body;
     /* the document node carries '#root' (Document IS an Element) */
     ab_new_node(ab, NT_DOCUMENT, T_hashroot);   /* doc = node 0 */
-    if (ab->bail) { ab_free(ab); Py_RETURN_NONE; }
-    if (fragment_body) {
+    if (fragment_body && !ab->bail) {
         /* treebuilder.parse_fragment(context='body'): an <html> root
          * holds the fragment; insertion starts in InBody */
         int root = ab_new_node(ab, NT_ELEMENT, T_html);
-        if (ab->bail) { ab_free(ab); Py_RETURN_NONE; }
-        ab_append_child(ab, 0, root);
-        iv_push(&ab->stack, root);
-        ab->mode = M_IN_BODY;
+        if (!ab->bail) {
+            ab_append_child(ab, 0, root);
+            iv_push(&ab->stack, root);
+            ab->mode = M_IN_BODY;
+        }
     }
 
     long guard = 0, guard_max = 4 * (long)n + 4096;
-    for (;;) {
+    while (!ab->bail) {
         Tok2 t;
         if (!ab_read(ab, &t) || ab->bail) break;
         if (ab->tok_end > ab->tok_start) {
@@ -6160,10 +6155,24 @@ static PyObject *py_build_arena(PyObject *self, PyObject *args) {
     if (ab->bail || PyErr_Occurred()) {
         PyErr_Clear();
         ab_free(ab);
-        Py_RETURN_NONE;
+        return 0;
     }
-    PyObject *r = ab_to_python(ab);
-    ab_free(ab);
+    return 1;
+}
+
+/* build_arena(html: str, track_spans: int) -> tuple | None (bail) */
+static PyObject *py_build_arena(PyObject *self, PyObject *args) {
+    const char *html;
+    Py_ssize_t n;
+    int track_spans, fragment_body = 0;
+    if (!PyArg_ParseTuple(args, "s#i|i", &html, &n, &track_spans,
+                          &fragment_body))
+        return NULL;
+    if (!g_ready || !g_pyids_ready) Py_RETURN_NONE;
+    AB ab;
+    if (!ab_build(&ab, html, n, track_spans, fragment_body)) Py_RETURN_NONE;
+    PyObject *r = ab_to_python(&ab);
+    ab_free(&ab);
     if (!r) {
         PyErr_Clear();
         Py_RETURN_NONE;
@@ -6343,41 +6352,9 @@ static PyObject *py_arena_doc_text(PyObject *self, PyObject *args) {
     if (!PyArg_ParseTuple(args, "s#|z#", &html, &n, &scope, &scope_len))
         return NULL;
     if (!g_ready || !g_pyids_ready) Py_RETURN_NONE;
-    if (memchr(html, 0, (size_t)n) != NULL) Py_RETURN_NONE;
-
     AB stack_ab;
     AB *ab = &stack_ab;
-    memset(ab, 0, sizeof(AB));
-    ab->s = (const uint8_t *)html;
-    ab->n = n;
-    ab->head_el = -1;
-    ab->form_el = -1;
-    ab->frameset_ok = 1;
-    ab->mode = M_INITIAL;
-    ab->orig_mode = M_INITIAL;
-    ab_new_node(ab, NT_DOCUMENT, T_hashroot);
-    long guard = 0, guard_max = 4 * (long)n + 4096;
-    for (;;) {
-        Tok2 t;
-        if (!ab_read(ab, &t) || ab->bail) break;
-        if (ab->tok_end > ab->tok_start) {
-            ab->cur_end_tag = (t.kind == AK_END) ? t.tag : -1;
-            ab->cur_start_tag = (t.kind == AK_START) ? t.tag : -1;
-            ab->cur_is_comment = (t.kind == AK_COMMENT);
-        } else {   /* synthetic / pending token: no source backing */
-            ab->cur_end_tag = -1; ab->cur_start_tag = -1;
-            ab->cur_is_comment = 0;
-        }
-        bprocess(ab, &t, -1);
-        if (ab->bail) break;
-        if (t.kind == AK_EOF) break;
-        if (++guard > guard_max) { ab_bail(ab); break; }
-    }
-    if (ab->bail || PyErr_Occurred()) {
-        PyErr_Clear();
-        ab_free(ab);
-        Py_RETURN_NONE;
-    }
+    if (!ab_build(ab, html, n, 0, 0)) Py_RETURN_NONE;
     BBuf text; memset(&text, 0, sizeof(text));
     BBuf title; memset(&title, 0, sizeof(title));
     int ok = 1;
@@ -6422,6 +6399,129 @@ static PyObject *py_arena_doc_text(PyObject *self, PyObject *args) {
     }
     PyMem_Free(text.d); PyMem_Free(title.d);
     ab_free(ab);
+    if (!r) {
+        PyErr_Clear();
+        Py_RETURN_NONE;
+    }
+    return r;
+}
+
+/* ============ main-content heuristic (ops/maincontent.py) ============
+ * main_content_text(arena) over the C arena: candidates and <a> elements
+ * in document order, each anchor's text length added to every candidate
+ * ancestor, score = len(text(c)) - 2 * link_len(c), first max wins; a
+ * best score <= 0 (or no candidate) falls back to the first <body>, else
+ * the root. Lengths count code points, as Python len() does. */
+
+/* len(Arena.node_text(nid)) in code points; -1 on allocation failure.
+ * ``buf`` is scratch, reused across calls. */
+static Py_ssize_t an_text_len(AB *ab, int nid, BBuf *buf) {
+    buf->len = 0;
+    if (!an_node_text(ab, nid, buf)) return -1;
+    Py_ssize_t cp = 0;
+    for (size_t i = 0; i < buf->len; i++)
+        cp += (buf->d[i] & 0xC0) != 0x80;   /* skip UTF-8 continuations */
+    return cp;
+}
+
+/* main_content_text(html, candidate_tags: tuple[bytes, ...])
+ *   -> str | None (bail) */
+static PyObject *py_main_content_text(PyObject *self, PyObject *args) {
+    const char *html;
+    Py_ssize_t n;
+    PyObject *names;
+    if (!PyArg_ParseTuple(args, "s#O!", &html, &n, &PyTuple_Type, &names))
+        return NULL;
+    if (!g_ready || !g_pyids_ready) Py_RETURN_NONE;
+    int ncand = (int)PyTuple_GET_SIZE(names);
+    if (ncand > 16) Py_RETURN_NONE;
+    AB ab;
+    if (!ab_build(&ab, html, n, 0, 0)) Py_RETURN_NONE;
+
+    /* candidate tag ids: the known table, else this doc's unknown tags */
+    int cand_tag[16], nct = 0;
+    for (int k = 0; k < ncand; k++) {
+        PyObject *nm = PyTuple_GET_ITEM(names, k);
+        if (!PyBytes_Check(nm)) { ab_free(&ab); Py_RETURN_NONE; }
+        const uint8_t *s = (const uint8_t *)PyBytes_AS_STRING(nm);
+        int len = (int)PyBytes_GET_SIZE(nm);
+        int id = tag_lookup(s, len);
+        for (int u = 0; id < 0 && u < ab.nunk; u++)
+            if (ab.unk_len[u] == len &&
+                memcmp(ab.pool + ab.unk_off[u], s, (size_t)len) == 0)
+                id = UNK_BASE + u;
+        if (id >= 0) cand_tag[nct++] = id;
+    }
+
+    int nn = ab.nn;
+    int *stack = (int *)PyMem_Malloc((size_t)(nn + 1) * sizeof(int));
+    int *cand_of = (int *)PyMem_Malloc((size_t)nn * sizeof(int));
+    IVec cands = {0}, anchors = {0};
+    Py_ssize_t *link = NULL;
+    BBuf buf; memset(&buf, 0, sizeof(buf));
+    PyObject *r = NULL;
+    int ok = stack && cand_of;
+    if (ok) {
+        /* document-order walk: candidates and anchors */
+        int top = 0;
+        stack[top++] = 0;
+        while (top && ok) {
+            int nid = stack[--top];
+            ANode *nd = &ab.nodes[nid];
+            cand_of[nid] = -1;
+            if (nd->ntype == NT_ELEMENT) {
+                if (nd->tag == T_a) ok = iv_push(&anchors, nid);
+                for (int k = 0; k < nct; k++)
+                    if (nd->tag == cand_tag[k]) {
+                        cand_of[nid] = cands.len;
+                        ok = ok && iv_push(&cands, nid);
+                        break;
+                    }
+            }
+            for (int k = nd->kids.len - 1; k >= 0; k--)
+                stack[top++] = nd->kids.d[k];
+        }
+    }
+    if (ok && cands.len) {
+        link = (Py_ssize_t *)PyMem_Calloc((size_t)cands.len,
+                                          sizeof(Py_ssize_t));
+        ok = link != NULL;
+    }
+    int best = -1;
+    if (ok && cands.len) {
+        for (int i = 0; i < anchors.len && ok; i++) {
+            Py_ssize_t ln = an_text_len(&ab, anchors.d[i], &buf);
+            ok = ln >= 0;
+            for (int p = ab.nodes[anchors.d[i]].parent; ok && p != -1;
+                 p = ab.nodes[p].parent)
+                if (cand_of[p] >= 0) link[cand_of[p]] += ln;
+        }
+        Py_ssize_t best_score = 0;
+        for (int i = 0; i < cands.len && ok; i++) {
+            Py_ssize_t ln = an_text_len(&ab, cands.d[i], &buf);
+            ok = ln >= 0;
+            Py_ssize_t score = ln - 2 * link[i];
+            if (best < 0 || score > best_score) {   /* ties: the first */
+                best = cands.d[i];
+                best_score = score;
+            }
+        }
+        if (best_score <= 0) best = -1;
+    }
+    if (ok && best < 0) {
+        best = an_find_first(&ab, T_body, NULL, 0);
+        if (best < 0) best = 0;
+    }
+    if (ok) {
+        buf.len = 0;
+        if (an_node_text(&ab, best, &buf))
+            r = PyUnicode_DecodeUTF8((const char *)buf.d,
+                                     (Py_ssize_t)buf.len, "strict");
+    }
+    PyMem_Free(stack); PyMem_Free(cand_of); PyMem_Free(link);
+    PyMem_Free(buf.d);
+    iv_free(&cands); iv_free(&anchors);
+    ab_free(&ab);
     if (!r) {
         PyErr_Clear();
         Py_RETURN_NONE;
@@ -6659,6 +6759,9 @@ static PyMethodDef methods[] = {
     {"arena_doc_text", py_arena_doc_text, METH_VARARGS,
      "arena-built (text, title, n_nodes, errors) for streaming-bail\n"
      "documents"},
+    {"main_content_text", py_main_content_text, METH_VARARGS,
+     "main_content_text(html, candidate_tags) -> ops/maincontent\n"
+     "main_content_text(arena) | None on bail-out"},
     {NULL, NULL, 0, NULL}
 };
 

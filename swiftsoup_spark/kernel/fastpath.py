@@ -18,6 +18,11 @@
    is then the final fallback, byte-identical either way
    (tests/test_fastpath.py, tests/test_arena_build.py; ~1M-doc
    cumulative differential campaigns, 0 mismatches).
+3. **Main-content heuristic** — ``main_content_text(html) -> str |
+   None``: ``ops/maincontent.main_content_text`` scored on the C arena
+   (candidates, anchor link lengths, first max wins, ``<body>``/root
+   fallback); only the winner's text is encoded as a ``str``. Bails
+   where the arena builder does (tests/test_maincontent.py).
 
 The C source is compiled once per machine with the system gcc into the
 package directory (or ``~/.cache`` if read-only); compilation results
@@ -278,6 +283,28 @@ def arena_doc_text(html: str, scope_id: str | None = None):
     if m is None or not hasattr(m, "arena_doc_text"):
         return None
     return m.arena_doc_text(html, scope_id)
+
+
+_cand_tags = None
+
+
+def main_content_text(html: str) -> str | None:
+    """``ops/maincontent.main_content_text`` of the parsed ``html``,
+    scored in C over the arena builder's tree, or None -> build the
+    arena and score it in Python. The candidate tags are the names
+    listed in ``maincontent.CANDIDATE_CSS``."""
+    global _cand_tags
+    m = get_module()
+    if m is None or not hasattr(m, "main_content_text"):
+        return None
+    if _cand_tags is None:
+        from swiftsoup_spark.ops.maincontent import CANDIDATE_CSS
+        _cand_tags = tuple(t.strip().encode()
+                           for t in CANDIDATE_CSS.split(","))
+    try:
+        return m.main_content_text(html, _cand_tags)
+    except Exception:
+        return None
 
 
 def build_arena(html: str, base_uri: str = "", track_spans: bool = False):

@@ -123,7 +123,11 @@ def pagerank_oracle_sql(edges_cte: str, iters: int = 5,
     Returns a full query ``WITH ... SELECT host, rank_e12``. The
     dangling share replays the identical integer split (DuckDB sums
     BIGINT into HUGEINT, so the DECIMAL(38) path maps to ``//``/``%``
-    hugeint arithmetic)."""
+    hugeint arithmetic).
+
+    The ``r{i}`` CTEs are ``MATERIALIZED``: ``r{i+1}`` reads ``r{i}``
+    twice (the rank join and the dangling mass), so an inlined chain
+    grows exponentially with ``iters``."""
     teleport = (1000 - damping_permille) * (SCALE // 1000)
     d = damping_permille
     parts = [f"edges AS ({edges_cte})",
@@ -134,8 +138,8 @@ def pagerank_oracle_sql(edges_cte: str, iters: int = 5,
              "nn AS (SELECT count(*) AS n FROM nodes)",
              "dang AS (SELECT host FROM nodes WHERE host NOT IN "
              "(SELECT src_host FROM outw))",
-             f"r0 AS (SELECT host, CAST({SCALE} AS BIGINT) AS rank_e12 "
-             f"FROM nodes)"]
+             f"r0 AS MATERIALIZED (SELECT host, CAST({SCALE} AS BIGINT) "
+             f"AS rank_e12 FROM nodes)"]
     share = ""
     for i in range(iters):
         if dangling:
@@ -143,7 +147,7 @@ def pagerank_oracle_sql(edges_cte: str, iters: int = 5,
        FROM (SELECT coalesce((SELECT SUM(r.rank_e12) FROM r{i} r
                               JOIN dang USING (host)), 0) AS dm,
                     1000 * (SELECT n FROM nn) AS m))"""
-        parts.append(f"""r{i + 1} AS (
+        parts.append(f"""r{i + 1} AS MATERIALIZED (
   SELECT n.host,
          CAST({teleport} + coalesce(s.c, 0){share} AS BIGINT) AS rank_e12
   FROM nodes n LEFT JOIN (

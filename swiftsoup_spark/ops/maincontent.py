@@ -20,8 +20,12 @@ the interesting boundary cases (link farm loses, tie goes to the first,
 chrome-only page degrades to body).
 
 Scale shape: runs inside the same fused Arrow-batch kernel stage as
-every other extraction operator (one scan -> mapInArrow, no shuffle);
-scoring is O(nodes + anchors * depth) per document on the flat arena.
+every other extraction operator (one scan -> mapInArrow, no shuffle).
+Each document is scored in C by ``kernel/fastpath.main_content_text``
+over the C arena (each candidate's and anchor's text length counted
+there, O(nodes * depth)), which encodes only the winner's text. The
+Python ``main_content_text`` below runs only where that bails (NUL
+bytes, > 64 unknown tags) and is its differential oracle.
 """
 
 from __future__ import annotations
@@ -69,10 +73,14 @@ def main_content_over(df, in_col: str = "html", keep_cols=("url",),
                       out_col: str = "text"):
     """(keep_cols..., text) — heuristic main-content text per document,
     as one fused Arrow-batch kernel stage (no shuffle)."""
+    from swiftsoup_spark.kernel import fastpath
     from swiftsoup_spark.spark.extract import apply_kernel, fast_parse
 
     def row(tb, s):
-        return (main_content_text(fast_parse(tb, s)),)
+        text = fastpath.main_content_text(s)
+        if text is None:
+            text = main_content_text(fast_parse(tb, s))
+        return (text,)
 
     return apply_kernel(df, row, [T.StructField(out_col, T.StringType())],
                         in_col=in_col, keep_cols=keep_cols)
