@@ -1,17 +1,27 @@
-"""Resumable extraction pipeline: url-hash bucketing, per-partition
-lineage/metrics manifest, idempotent partition overwrite.
+"""Resumable extraction pipeline: url-hash bucketing, per-bucket
+lineage manifest, idempotent partition overwrite.
 
 North-rule requirements implemented here:
   * explicit url-hash bucketing: ``bucket = pmod(xxhash64(url), n)`` — at
     10^12 docs this is the unit of retry/commit (maps 1:1 onto an Iceberg
     partition; the parquet fallback uses dynamic partition overwrite,
     which has the same replace-not-append semantics).
-  * per-partition lineage: (bucket, row_count, byte_count, checksum,
+  * per-bucket lineage: (bucket, row_count, byte_count, checksum,
     status) — checksum is an order-independent sum of xxhash64(url‖text),
     so N-core and 4N-core runs of the same input produce identical
     manifests (the determinism/scaling oracle).
+  * append-only manifest: ``_manifest/`` is a flat directory of parquet
+    files, one per run, each holding the rows of the buckets that run
+    wrote. A run writes its file under a hidden temp name and renames it
+    into place (``os.replace``), so readers see either the whole file or
+    none of it, and no earlier run's file is ever rewritten. The
+    directory is read on the driver with pyarrow; Spark reads it as one
+    table too (same column types as a Spark-written manifest).
   * idempotent resume: buckets already 'done' in the manifest are skipped;
-    re-running a finished job is a no-op.
+    re-running a finished job returns at once and starts no Spark job.
+    A crash after the data write, before the rename, redoes only that
+    run's buckets on the next run; earlier runs' entries are never
+    touched, so a crash anywhere in the commit loses none of them.
 Skew handling: bucket keys are hashes (uniform by construction); doc-size
 skew is addressed by Arrow batch sizing (maxRecordsPerBatch) and, for
 pathological hosts, an optional salt column.
@@ -20,14 +30,23 @@ pathological hosts, an optional salt column.
 from __future__ import annotations
 
 import os
-import shutil
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from swiftsoup_spark.spark.extract import extract_pages
 
 
 MANIFEST = "_manifest"
+# the column types a Spark-written manifest has (int bucket, bigint
+# aggregates), so Spark reads driver- and Spark-written files as one table
+MANIFEST_SCHEMA = pa.schema([
+    ("bucket", pa.int32()), ("row_count", pa.int64()),
+    ("byte_count", pa.int64()), ("checksum", pa.int64()),
+    ("status", pa.string())])
 
 
 # --- table-format seam ------------------------------------------------------
@@ -91,19 +110,38 @@ def _manifest_path(out_dir: str) -> str:
     return os.path.join(out_dir, MANIFEST)
 
 
-def read_manifest(spark, out_dir: str):
-    p = _manifest_path(out_dir)
-    try:
-        return spark.read.parquet(p)
-    except Exception:
-        return None
-
-
 def done_buckets(spark, out_dir: str) -> set[int]:
-    m = read_manifest(spark, out_dir)
-    if m is None:
+    """Buckets with a 'done' manifest row. Read on the driver (no Spark
+    job); a missing manifest means none, an unreadable file raises."""
+    p = _manifest_path(out_dir)
+    if not os.path.isdir(p):
         return set()
-    return {r.bucket for r in m.filter(F.col("status") == "done").collect()}
+    # pyarrow skips names starting with '.' or '_': commit temp files,
+    # Spark's _SUCCESS and .crc files
+    t = pq.read_table(p, columns=["bucket", "status"], schema=MANIFEST_SCHEMA)
+    return {b for b, s in zip(t["bucket"].to_pylist(), t["status"].to_pylist())
+            if s == "done"}
+
+
+def _commit_manifest(out_dir: str, rows) -> None:
+    """Add one manifest file holding ``rows``; earlier files stay as
+    they are. The hidden temp name (leading '.', no '.parquet' suffix)
+    keeps a half-written file out of every reader's listing."""
+    p = _manifest_path(out_dir)
+    os.makedirs(p, exist_ok=True)
+    if not rows:
+        return
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(p, f".{name}.tmp")
+    pq.write_table(pa.Table.from_pylist([r.asDict() for r in rows],
+                                        schema=MANIFEST_SCHEMA), tmp)
+    os.replace(tmp, os.path.join(p, name))
+
+
+def _manifest_df(spark, out_dir: str):
+    # an explicit schema: Spark would start a job to infer it
+    return (spark.read.schema(from_arrow_schema(MANIFEST_SCHEMA))
+            .parquet(_manifest_path(out_dir)))
 
 
 def run_extraction(spark, pages_df, out_dir: str, n_buckets: int = 32,
@@ -118,6 +156,8 @@ def run_extraction(spark, pages_df, out_dir: str, n_buckets: int = 32,
     """
     fmt = table_format or table_format_for(out_dir)
     done = done_buckets(spark, out_dir)
+    if done >= set(range(n_buckets)):
+        return _manifest_df(spark, out_dir)
     bucketed = pages_df.withColumn(
         "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"))
     todo = bucketed.filter(~F.col("bucket").isin(list(done))) if done else bucketed
@@ -132,10 +172,13 @@ def run_extraction(spark, pages_df, out_dir: str, n_buckets: int = 32,
     out = extracted.select("bucket", "url", "text", "n_nodes", "parse_errors")
     target = fmt.extracted_target(out_dir)
     fmt.overwrite_partitions(out, target, "bucket")
-    # lineage manifest: one row per bucket, order-independent checksum —
-    # derived by READING BACK the files just written (not from ``out``'s
-    # lineage, which would re-run the whole parse a second time and
-    # describe a recomputation rather than what landed on disk)
+    # lineage manifest: one row per bucket this run wrote, order-independent
+    # checksum — derived by READING BACK the files just written (not from
+    # ``out``'s lineage, which would re-run the whole parse a second time
+    # and describe a recomputation rather than what landed on disk). The
+    # rows (at most n_buckets) are committed from the driver as this run's
+    # own manifest file: until that rename lands, these buckets are not
+    # done, so a crash here redoes exactly them on the next run.
     written = fmt.read(spark, target)
     if done:
         written = written.filter(~F.col("bucket").isin(list(done)))
@@ -145,15 +188,8 @@ def run_extraction(spark, pages_df, out_dir: str, n_buckets: int = 32,
                 F.expr('bit_xor(xxhash64(concat_ws("\\u0000", url, text)))')
                  .alias("checksum"))
            .withColumn("status", F.lit("done")))
-    prior = read_manifest(spark, out_dir)
-    if prior is not None and done:
-        man = prior.filter(F.col("bucket").isin(list(done))).unionByName(man)
-    tmp = _manifest_path(out_dir) + ".tmp"
-    man.write.mode("overwrite").parquet(tmp)
-    final = spark.read.parquet(tmp)
-    final.write.mode("overwrite").parquet(_manifest_path(out_dir))
-    shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(_manifest_path(out_dir))
+    _commit_manifest(out_dir, man.collect())
+    return _manifest_df(spark, out_dir)
 
 
 def corpus_checksum(spark, out_dir: str) -> int:

@@ -5,6 +5,16 @@ from __future__ import annotations
 import os
 
 
+def _default_driver_memory() -> str:
+    """48g, capped at half of physical memory: a heap limit above the
+    machine's memory lets the JVM grow until the kernel kills it."""
+    try:
+        half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    except (AttributeError, ValueError, OSError):   # no sysconf / no such name
+        return "48g"
+    return "48g" if half_mb >= 48 * 1024 else f"{half_mb}m"
+
+
 def get_spark(master: str | None = None, app: str = "swiftsoup_spark",
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None):
@@ -35,7 +45,8 @@ def get_spark(master: str | None = None, app: str = "swiftsoup_spark",
         # long-lived Python workers: daemon reuse keeps the native kernel
         # + imports warm across tasks (explicit — it is also the default)
         .config("spark.python.worker.reuse", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM")
+                or _default_driver_memory())
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -1,7 +1,9 @@
 """Resumable-pipeline tests: bucketing, lineage manifest, idempotent
-resume, and the N-vs-4N determinism oracle (identical corpus checksums at
-two parallelism levels)."""
+resume, crash injection into the manifest commit, and the N-vs-4N
+determinism oracle (identical corpus checksums at two parallelism
+levels)."""
 
+import glob
 import os
 import shutil
 import sys
@@ -57,6 +59,178 @@ def test_run_and_resume(spark, tmp_path_factory):
     ex = spark.read.parquet(os.path.join(out, "extracted"))
     assert ex.count() == n_total
     assert ex.filter(F.col("parse_errors") != 0).count() == 0
+
+
+# the manifest schema as Spark writes it: every column nullable
+def _manifest_schema():
+    from pyspark.sql.types import (IntegerType, LongType, StringType,
+                                   StructField, StructType)
+    return StructType([StructField("bucket", IntegerType()),
+                       StructField("row_count", LongType()),
+                       StructField("byte_count", LongType()),
+                       StructField("checksum", LongType()),
+                       StructField("status", StringType())])
+
+
+@pytest.fixture(scope="module")
+def finished(spark, tmp_path_factory):
+    """One uninterrupted 8-bucket run: (pages, its output dir, its
+    manifest rows, its corpus checksum). Tests work on copies."""
+    from swiftsoup_spark.spark.pages import pages_df
+    from swiftsoup_spark.spark import pipeline as P
+
+    pages = pages_df(spark, SF_DIR)
+    out = str(tmp_path_factory.mktemp("finished") / "out")
+    rows = P.run_extraction(spark, pages, out, n_buckets=8).collect()
+    assert {r.bucket for r in rows} == set(range(8))
+    return pages, out, sorted(rows), P.corpus_checksum(spark, out)
+
+
+def _copy(finished, tmp_path):
+    out = str(tmp_path / "out")
+    shutil.copytree(finished[1], out)
+    return out
+
+
+def _bucket_files(out):
+    """bucket -> its data file names (a rewrite gives new names)."""
+    ext = os.path.join(out, "extracted")
+    return {int(d.split("=")[1]): sorted(os.listdir(os.path.join(ext, d)))
+            for d in os.listdir(ext) if d.startswith("bucket=")}
+
+
+def _int32(values):
+    import pyarrow as pa
+    return pa.array(values, pa.int32())
+
+
+def _manifest_files(out):
+    from swiftsoup_spark.spark import pipeline as P
+    return set(glob.glob(os.path.join(out, P.MANIFEST, "*.parquet")))
+
+
+def test_noop_rerun_starts_no_spark_job(spark, finished, tmp_path):
+    from swiftsoup_spark.spark import pipeline as P
+
+    pages, _, rows, _ = finished
+    out = _copy(finished, tmp_path)
+    sc = spark.sparkContext
+    sc.setJobGroup("noop-rerun", "re-run over a finished output")
+    try:
+        man = P.run_extraction(spark, pages, out, n_buckets=8)
+        jobs = list(sc.statusTracker().getJobIdsForGroup("noop-rerun"))
+        spark.range(3).count()      # the group does see this thread's jobs
+        control = sc.statusTracker().getJobIdsForGroup("noop-rerun")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+    assert len(control) >= 1
+    assert man.schema == _manifest_schema()
+    assert sorted(man.collect()) == rows
+
+
+def test_crash_in_commit_redoes_only_that_runs_buckets(
+        spark, finished, tmp_path, monkeypatch):
+    """The commit raises after the data write: the next run redoes
+    exactly the buckets of the crashed run, and the corpus checksum is
+    that of an uninterrupted run."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from swiftsoup_spark.spark import pipeline as P
+
+    pages, _, _, cks_full = finished
+    out = _copy(finished, tmp_path)
+    mdir = os.path.join(out, P.MANIFEST)
+    t = pq.read_table(mdir)
+    keep = t.filter(pc.invert(pc.is_in(t["bucket"],
+                                       value_set=_int32([1, 3, 5]))))
+    shutil.rmtree(mdir)
+    os.makedirs(mdir)
+    pq.write_table(keep, os.path.join(mdir, "part-00000.parquet"))
+    kept = {0, 2, 4, 6, 7}
+
+    def crash(out_dir, rows):
+        raise RuntimeError("killed in the manifest commit")
+
+    monkeypatch.setattr(P, "_commit_manifest", crash)
+    with pytest.raises(RuntimeError, match="killed in the manifest commit"):
+        P.run_extraction(spark, pages, out, n_buckets=8)
+    monkeypatch.undo()
+    assert P.done_buckets(spark, out) == kept   # earlier entries intact
+
+    before_data, before_man = _bucket_files(out), _manifest_files(out)
+    P.run_extraction(spark, pages, out, n_buckets=8)
+    after = _bucket_files(out)
+    assert {b for b in after if after[b] != before_data[b]} == {1, 3, 5}
+    (new,) = _manifest_files(out) - before_man
+    assert sorted(pq.read_table(new)["bucket"].to_pylist()) == [1, 3, 5]
+    assert P.corpus_checksum(spark, out) == cks_full
+
+
+def test_half_written_temp_file_is_invisible(spark, finished, tmp_path):
+    """Temp files of a commit that never reached its rename — one cut
+    short, one complete with a row no reader may see — are skipped by
+    ``done_buckets``, Spark and a DuckDB ``*.parquet`` glob alike."""
+    import duckdb
+    import pyarrow.parquet as pq
+    from swiftsoup_spark.spark import pipeline as P
+
+    out = _copy(finished, tmp_path)
+    mdir = os.path.join(out, P.MANIFEST)
+    (done_file,) = _manifest_files(out)
+    ghost = pq.read_table(done_file).slice(0, 1).set_column(
+        0, "bucket", _int32([99]))
+    pq.write_table(ghost, os.path.join(mdir, ".part-ghost.parquet.tmp"))
+    with open(done_file, "rb") as f:
+        head = f.read()
+    with open(os.path.join(mdir, ".part-cut.parquet.tmp"), "wb") as f:
+        f.write(head[:len(head) // 2])
+
+    assert P.done_buckets(spark, out) == set(range(8))
+    assert sorted(r.bucket for r in spark.read.parquet(mdir).collect()) \
+        == list(range(8))
+    assert sorted(b for (b,) in duckdb.connect().execute(
+        f"SELECT bucket FROM read_parquet('{mdir}/*.parquet')").fetchall()) \
+        == list(range(8))
+
+
+def test_corrupt_manifest_file_raises(spark, finished, tmp_path):
+    """An unreadable manifest file is an error, not 'nothing is done':
+    the run raises before it recomputes any bucket."""
+    import pyarrow as pa
+    from swiftsoup_spark.spark import pipeline as P
+
+    pages = finished[0]
+    out = _copy(finished, tmp_path)
+    with open(os.path.join(out, P.MANIFEST, "part-x.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    before = _bucket_files(out)
+    with pytest.raises(pa.ArrowInvalid):
+        P.run_extraction(spark, pages, out, n_buckets=8)
+    assert _bucket_files(out) == before
+
+
+def test_manifest_schema_mixed_writers(spark, finished, tmp_path):
+    """A manifest directory holding a Spark-written file (as
+    test_run_and_resume writes one) and a driver-written commit reads in
+    Spark as one table with the Spark manifest schema, file by file too."""
+    from swiftsoup_spark.spark import pipeline as P
+
+    rows = finished[2]
+    out = _copy(finished, tmp_path)
+    mdir = os.path.join(out, P.MANIFEST)
+    spark.createDataFrame([r for r in rows if r.bucket not in (1, 3, 5)],
+                          _manifest_schema()) \
+        .write.mode("overwrite").parquet(mdir)
+    P._commit_manifest(out, [r for r in rows if r.bucket in (1, 3, 5)])
+
+    files = _manifest_files(out)
+    assert len(files) >= 2
+    assert spark.read.parquet(mdir).schema == _manifest_schema()
+    for f in files:
+        assert spark.read.parquet(f).schema == _manifest_schema(), f
+    assert sorted(spark.read.parquet(mdir).collect()) == rows
+    assert P.done_buckets(spark, out) == set(range(8))
 
 
 def test_parallelism_determinism(tmp_path_factory):

@@ -1,6 +1,8 @@
-"""``get_spark``'s shuffle-partition count: an explicit argument always
-wins; otherwise ``SPARK_GRAFT_CPUS`` when it is a number, else 32. One
-JVM serves each process, so the builder is inspected, not started."""
+"""``get_spark``'s defaults. Shuffle-partition count: an explicit
+argument always wins; otherwise ``SPARK_GRAFT_CPUS`` when it is a number,
+else 32. Driver memory: ``SPARK_DRIVER_MEM``, else 48g capped at half of
+physical memory. One JVM serves each process, so the builder is
+inspected, not started."""
 
 import os
 import sys
@@ -59,3 +61,21 @@ def test_shuffle_partitions(builder, monkeypatch, cpus, arg, want):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", cpus)
     assert get_spark(master="local[1]", shuffle_partitions=arg) is builder
     assert builder.conf["spark.sql.shuffle.partitions"] == want
+
+
+@pytest.mark.parametrize("env,phys_gib,want", [
+    (None, 15, "7680m"), (None, 128, "48g"), (None, 96, "48g"),
+    ("3g", 15, "3g"), ("64g", 15, "64g")])
+def test_driver_memory_default(builder, monkeypatch, env, phys_gib, want):
+    """The 48g default is capped at half of physical memory;
+    ``SPARK_DRIVER_MEM`` wins either way."""
+    from swiftsoup_spark.spark.session import get_spark
+
+    pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": phys_gib * 2**30 // 4096}
+    monkeypatch.setattr(os, "sysconf", pages.__getitem__)
+    if env is None:
+        monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_DRIVER_MEM", env)
+    get_spark(master="local[1]")
+    assert builder.conf["spark.driver.memory"] == want
