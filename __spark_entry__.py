@@ -4,7 +4,7 @@
 HTML kernel operators (parse → text()/select()/clean()/outerHtml over the
 deterministic Common-Crawl-style pages table synthesized from
 ``documents``), plus the training-data-pipeline operators (dedup,
-similarity search, text analysis). ``oracle_sql()`` gives each a
+text analysis). ``oracle_sql()`` gives each a
 closed-form DuckDB oracle over the same parquet inputs — for the HTML
 queries the oracle inverts the page template, so the check validates the
 whole synth → tokenize → tree-build → extract chain byte-for-byte.
@@ -25,16 +25,12 @@ from swiftsoup_spark.spark.pages import (
     HTML_SQL, NP_SQL, TS0, URL_SQL, pages_df, load_documents,
 )
 from swiftsoup_spark.spark import extract as X
-from swiftsoup_spark.ops import dedup as D, similarity as S, textstats as TX
+from swiftsoup_spark.ops import dedup as D, textstats as TX
 from swiftsoup_spark.ops.hll import hll_oracle_sql
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 # --------------------------------------------------------------------------
@@ -172,17 +168,6 @@ def q_html_tables(spark, sf_dir):
     return (rows.select("url", "table_idx", "row_idx",
                         F.posexplode("cells").alias("cell_idx", "cell"))
             .withColumn("cell_idx", F.col("cell_idx").cast("int")))
-
-
-def q_embed_pool(spark, sf_dir):
-    """Exact vector pooling (ops/similarity.pool_embeddings): per-label
-    element-wise sums of the embedding column in e6 fixed point — each
-    float quantized by ONE correctly-rounded IEEE multiply + round,
-    reduction over exact BIGINTs, so results are bit-identical across
-    partitionings and engines. One posexplode + one (label, dim)
-    groupBy — the 10^9-vector centroid-update shape."""
-    from swiftsoup_spark.ops.similarity import pool_embeddings
-    return pool_embeddings(_emb(spark, sf_dir))
 
 
 def q_sample_temperature(spark, sf_dir):
@@ -756,7 +741,7 @@ def q_corpus_metrics(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# Training-data pipeline queries (dedup / similarity / text analysis)
+# Training-data pipeline queries (dedup / text analysis)
 # --------------------------------------------------------------------------
 
 def q_extract_main_heuristic(spark, sf_dir):
@@ -986,61 +971,6 @@ def q_lang_detect(spark, sf_dir):
 
 def q_fingerprint(spark, sf_dir):
     return TX.fingerprint(_docs(spark, sf_dir))
-
-
-def q_ann_brute_force(spark, sf_dir):
-    df = S.brute_force_topk(_emb(spark, sf_dir), n_queries=8, k=5)
-    return df.select("query_id", "neighbor_id", "rank",
-                     F.round(F.col("sim") * 10000).cast("long").alias("sim_e4"))
-
-
-def q_ann_bucketed(spark, sf_dir):
-    df = S.bucketed_topk(_emb(spark, sf_dir), n_queries=8, k=5)
-    return df.select("query_id", "neighbor_id", "rank",
-                     F.round(F.col("sim") * 10000).cast("long").alias("sim_e4"))
-
-
-def q_ann_ivf(spark, sf_dir):
-    """Trained-IVF ANN: hash-sampled seeds + one Lloyd iteration give the
-    coarse quantizer; every vector is assigned argmax-cosine; each query
-    multi-probes its 2 nearest centroids (equi broadcast-hash join on the
-    centroid id — the pruned-join shape). The DuckDB oracle replays the
-    identical training (same seeds, same Lloyd round, centroids rounded
-    to 9 digits on both sides), so the whole index build + probe is
-    hash-exact, not just row-counted. Recall vs the exact baseline is
-    gated separately in tests/test_similarity_ivf.py on a clustered
-    corpus (the sf embeddings are near-uniform noise, where no coarse
-    quantizer can do better than nprobe/k — measured and documented)."""
-    df = S.ivf_topk(_emb(spark, sf_dir), n_queries=8, k=5,
-                    n_centroids=8, nprobe=2, iters=1)
-    return df.select("query_id", "neighbor_id", "rank",
-                     F.round(F.col("sim") * 10000).cast("long").alias("sim_e4"))
-
-
-def q_cosine_near_dup(spark, sf_dir):
-    df = S.cosine_near_dup_pairs(_emb(spark, sf_dir), threshold=0.8, limit_ids=200)
-    return df.select("i", "j", F.round(F.col("sim") * 10000).cast("long").alias("sim_e4"))
-
-
-def q_embed_lsh_near_dup(spark, sf_dir):
-    """Banded sign-LSH near-dup over embeddings — the SCALE path for
-    embedding-cosine dedup (one banded self-join + id re-join verify,
-    never all-pairs; ops/similarity.embed_lsh_near_dup). The sf
-    embeddings are near-uniform noise with no qualifying pairs, so the
-    query plants deterministic near-duplicates: a +0.02-per-dim copy of
-    every 3rd vector (sim ~0.98-0.99), identically expressible in Spark
-    and DuckDB doubles; the oracle replays signature, banding, candidate
-    join and verify bit-for-bit, so found pairs are hash-exact. Recall
-    vs exact all-pairs is gated separately in tests/test_embed_lsh.py."""
-    base = (_emb(spark, sf_dir).filter(F.col("vec_id") < 300)
-            .select("vec_id",
-                    F.transform("embedding", lambda x: x.cast("double"))
-                     .alias("embedding")))
-    pert = (base.filter(F.col("vec_id") % 3 == 0)
-            .select((F.col("vec_id") + 100000).alias("vec_id"),
-                    F.transform("embedding", lambda x: x + F.lit(0.02))
-                     .alias("embedding")))
-    return S.embed_lsh_near_dup(base.unionByName(pert), threshold=0.9)
 
 
 def _decontam_bench(docs):
@@ -1429,16 +1359,6 @@ def q_og_meta(spark, sf_dir):
     return og_meta(variant_pages_df(spark, sf_dir, "headmeta"))
 
 
-def q_embed_decontam(spark, sf_dir):
-    """Embedding-space benchmark decontamination
-    (ops/similarity.embed_decontam): the 16 'benchmark' vectors are
-    corpus members (vec_id < 16), so the gate checks both the
-    flag (their self-sim 1.0 trips it) and the full max-cosine
-    landscape of every other vector at e4 precision."""
-    bench = _emb(spark, sf_dir).filter(F.col("vec_id") < 16)
-    return S.embed_decontam(_emb(spark, sf_dir), bench)
-
-
 def q_split_assign(spark, sf_dir):
     """Content-hash train/val/test assignment (ops/mixing.split_assign):
     reshard-proof (bucket from md5(text), not position), dup-leak-proof
@@ -1557,28 +1477,6 @@ def q_host_stats(spark, sf_dir):
     """Plain per-host aggregates (partial-agg combines map-side)."""
     from swiftsoup_spark.ops.hoststats import host_stats
     return host_stats(pages_df(spark, sf_dir))
-
-
-def q_semdedup(spark, sf_dir):
-    """SemDeDup semantic dedup (ops/similarity.semdedup): coarse
-    k-means-lite clusters (the same deterministic quantizer as
-    ann_ivf), intra-cluster cosine >= 0.95 drops the higher vec_id.
-    The sf embeddings are near-uniform noise with no qualifying pairs
-    (max pairwise cosine ~0.51), so the query plants the same
-    deterministic +0.02-per-dim near-duplicate copies as
-    embed_lsh_near_dup; the oracle replays seeding, one Lloyd round
-    (with the keep-seed-on-empty-cluster rule), assignment and the
-    intra-cluster pair drop verbatim."""
-    base = (_emb(spark, sf_dir).filter(F.col("vec_id") < 300)
-            .select("vec_id",
-                    F.transform("embedding", lambda x: x.cast("double"))
-                     .alias("embedding")))
-    pert = (base.filter(F.col("vec_id") % 3 == 0)
-            .select((F.col("vec_id") + 100000).alias("vec_id"),
-                    F.transform("embedding", lambda x: x + F.lit(0.02))
-                     .alias("embedding")))
-    return S.semdedup(base.unionByName(pert), n_clusters=8,
-                      threshold_e4=9500)
 
 
 def q_paragraph_dedup(spark, sf_dir):
@@ -1981,8 +1879,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         # -- never driver-gated before r5 -------------------------------
         "lang_detect": q_lang_detect,
-        "ann_ivf": q_ann_ivf,
-        "embed_lsh_near_dup": q_embed_lsh_near_dup,
         "decontam": q_decontam,
         "line_dedup": q_line_dedup,
         "url_canon_dedup": q_url_canon_dedup,
@@ -2012,7 +1908,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "passage_excise": q_passage_excise,
         "pack_chunks": q_pack_chunks,
         "sample_temperature": q_sample_temperature,
-        "embed_pool": q_embed_pool,
         "crawl_frontier": q_crawl_frontier,
         "crawl_delta": q_crawl_delta,
         "doclen_quantiles": q_doclen_quantiles,
@@ -2034,14 +1929,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the media codecs and the clickstream-event operators.
         "extract_text_tables": q_extract_text_tables,
         "fingerprint": q_fingerprint,
-        "ann_bucketed": q_ann_bucketed,
         "extract_text": q_extract_text,
         "extract_main_text": q_extract_main_text,
-        # ---- position 50: the driver gate records exactly this far ----
+        # Entered the window when ann_ivf, embed_lsh_near_dup, embed_pool
+        # and ann_bucketed were deleted with the synthetic-embedding
+        # operators.
         "extract_title": q_extract_title,
         "select_count": q_select_count,
         "select_all_count": q_select_all_count,
         "select_abs_href": q_select_abs_href,
+        # ---- position 50: the driver gate records exactly this far ----
         "select_attr": q_select_attr,
         "select_has": q_select_has,
         "select_nth": q_select_nth,
@@ -2089,11 +1986,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "jsonl_export": q_jsonl_export,
         "split_assign": q_split_assign,
         "url_templates": q_url_templates,
-        "embed_decontam": q_embed_decontam,
         "page_directives": q_page_directives,
         "og_meta": q_og_meta,
         "cms_sketch": q_cms_sketch,
-        "semdedup": q_semdedup,
         "paragraph_dedup": q_paragraph_dedup,
         "perplexity_filter": q_perplexity_filter,
         "bpe_train": q_bpe_train,
@@ -2112,9 +2007,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bm25_snippets": q_bm25_snippets,
         "asof_snapshot": q_asof_snapshot,
         # -- rotated out of the gate window (older green rows, code
-        # unchanged since): r3 similarity baselines + r2 host aggs
-        "ann_brute_force": q_ann_brute_force,
-        "cosine_near_dup": q_cosine_near_dup,
+        # unchanged since): r2 host aggs
         "host_url_sample": q_host_url_sample,
         "host_stats": q_host_stats,
         # -- governance layer (late r5; appended per convention) --------
@@ -2166,116 +2059,6 @@ s AS (SELECT doc_id, len(ws) AS sz FROM t)
 SELECT i, j, round(c * 1.0 / (si.sz + sj.sz - c), 6) AS jaccard
 FROM inter JOIN s si ON si.doc_id = i JOIN s sj ON sj.doc_id = j
 WHERE round(c * 1.0 / (si.sz + sj.sz - c), 6) >= {_ND_THRESHOLD}
-"""
-    ann = """
-WITH b AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-q AS (SELECT vec_id AS query_id, v AS qv FROM b WHERE vec_id < 8),
-s AS (SELECT query_id, vec_id AS neighbor_id,
-             list_cosine_similarity(qv, v) AS sim_raw
-      FROM b, q WHERE vec_id != query_id),
-r AS (SELECT query_id, neighbor_id,
-             CAST(row_number() OVER (PARTITION BY query_id
-                  ORDER BY sim_raw DESC, neighbor_id) AS INTEGER) AS rank,
-             sim_raw FROM s)
-SELECT query_id, neighbor_id, rank,
-       CAST(round(round(sim_raw, 4) * 10000) AS BIGINT) AS sim_e4
-FROM r WHERE rank <= 5
-"""
-    ann_bucketed = """
-WITH b AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-q AS (SELECT vec_id AS query_id, label AS qb, v AS qv FROM b WHERE vec_id < 8),
-s AS (SELECT query_id, vec_id AS neighbor_id,
-             list_cosine_similarity(qv, v) AS sim_raw
-      FROM b JOIN q ON b.label = q.qb WHERE vec_id != query_id),
-r AS (SELECT query_id, neighbor_id,
-             CAST(row_number() OVER (PARTITION BY query_id
-                  ORDER BY sim_raw DESC, neighbor_id) AS INTEGER) AS rank,
-             sim_raw FROM s)
-SELECT query_id, neighbor_id, rank,
-       CAST(round(round(sim_raw, 4) * 10000) AS BIGINT) AS sim_e4
-FROM r WHERE rank <= 5
-"""
-    ann_ivf = """
-WITH b AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-rk AS (SELECT vec_id, v,
-              row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS r
-       FROM b),
-seeds AS (SELECT r - 1 AS sid, v AS sv FROM rk WHERE r <= 8),
-a1 AS (SELECT vec_id, v, sid AS cid FROM (
-         SELECT b.vec_id, b.v, s.sid,
-                row_number() OVER (PARTITION BY b.vec_id
-                     ORDER BY list_cosine_similarity(b.v, s.sv) DESC, s.sid) AS rn
-         FROM b, seeds s) t WHERE rn = 1),
-comp AS (SELECT cid, dim, round(avg(val), 9) AS av FROM (
-           SELECT cid, unnest(v) AS val, generate_subscripts(v, 1) - 1 AS dim
-           FROM a1) t
-         GROUP BY cid, dim),
-cent AS (SELECT cid, list(av ORDER BY dim) AS cv FROM comp GROUP BY cid),
-asg AS (SELECT vec_id, v, cid FROM (
-          SELECT b.vec_id, b.v, c.cid,
-                 row_number() OVER (PARTITION BY b.vec_id
-                      ORDER BY list_cosine_similarity(b.v, c.cv) DESC, c.cid) AS rn
-          FROM b, cent c) t WHERE rn = 1),
-probe AS (SELECT query_id, qv, cid AS qcid FROM (
-            SELECT b.vec_id AS query_id, b.v AS qv, c.cid,
-                   row_number() OVER (PARTITION BY b.vec_id
-                        ORDER BY list_cosine_similarity(b.v, c.cv) DESC, c.cid) AS rn
-            FROM b, cent c WHERE b.vec_id < 8) t WHERE rn <= 2),
-s AS (SELECT p.query_id, a.vec_id AS neighbor_id,
-             list_cosine_similarity(p.qv, a.v) AS sim_raw
-      FROM asg a JOIN probe p ON a.cid = p.qcid
-      WHERE a.vec_id != p.query_id),
-r AS (SELECT query_id, neighbor_id,
-             CAST(row_number() OVER (PARTITION BY query_id
-                  ORDER BY sim_raw DESC, neighbor_id) AS INTEGER) AS rank,
-             sim_raw FROM s)
-SELECT query_id, neighbor_id, rank,
-       CAST(round(round(sim_raw, 4) * 10000) AS BIGINT) AS sim_e4
-FROM r WHERE rank <= 5
-"""
-    near_dup = """
-WITH b AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-           WHERE vec_id < 200)
-SELECT a.vec_id AS i, c.vec_id AS j,
-       CAST(round(round(list_cosine_similarity(a.v, c.v), 4) * 10000) AS BIGINT) AS sim_e4
-FROM b a JOIN b c ON a.vec_id < c.vec_id
-WHERE round(list_cosine_similarity(a.v, c.v), 4) >= 0.8
-"""
-    # sign-LSH oracle: replays hyperplane signatures, banding, candidate
-    # join and verify with the same literal hyperplanes as the Spark
-    # plan (ops/similarity.hyperplanes); dot products are written as
-    # sequential left-to-right sums so IEEE doubles agree bit-for-bit
-    # with Spark's aggregate() fold and bit signs can never diverge.
-    from swiftsoup_spark.ops.similarity import hyperplanes as _lsh_planes
-    _planes = _lsh_planes(24, 64)
-
-    def _dot_sql(p):
-        return " + ".join(f"v[{d + 1}]*{c!r}" for d, c in enumerate(p))
-
-    _band_exprs = []
-    for _b in range(4):
-        _terms = " + ".join(
-            f"(CASE WHEN {_dot_sql(_planes[_b * 6 + _i])} >= 0 "
-            f"THEN {1 << _i} ELSE 0 END)"
-            for _i in range(6))
-        _band_exprs.append(f"({_terms})")
-    embed_lsh = f"""
-WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-              WHERE vec_id < 300),
-u AS (SELECT vec_id, v FROM base
-      UNION ALL
-      SELECT vec_id + 100000 AS vec_id, list_transform(v, x -> x + 0.02) AS v
-      FROM base WHERE vec_id % 3 = 0),
-sig AS (SELECT vec_id, [{', '.join(_band_exprs)}] AS bands FROM u),
-e AS (SELECT vec_id, generate_subscripts(bands, 1) - 1 AS band,
-             unnest(bands) AS bv FROM sig),
-cand AS (SELECT DISTINCT a.vec_id AS i, c.vec_id AS j
-         FROM e a JOIN e c ON a.band = c.band AND a.bv = c.bv
-                          AND a.vec_id < c.vec_id),
-s AS (SELECT i, j, round(list_cosine_similarity(x.v, y.v), 4) AS sim
-      FROM cand JOIN u x ON x.vec_id = i JOIN u y ON y.vec_id = j)
-SELECT i, j, CAST(round(sim * 10000) AS BIGINT) AS sim_e4
-FROM s WHERE sim >= 0.9
 """
     # decontamination oracle: rebuilds the benchmark slice table and the
     # doc shingles from the same normalize/ngram formulas (ngram_sql is
@@ -2907,11 +2690,6 @@ WHERE bit_count(xor(CAST(a.uv AS UBIGINT), CAST(b.uv AS UBIGINT))) <= 3
         "fingerprint": (
             "SELECT doc_id, md5(trim(regexp_replace(text, '[ \\t\\n\\r]+', ' ', 'g'))) "
             "AS fp FROM documents"),
-        "ann_brute_force": ann,
-        "ann_bucketed": ann_bucketed,
-        "ann_ivf": ann_ivf,
-        "cosine_near_dup": near_dup,
-        "embed_lsh_near_dup": embed_lsh,
         "decontam": decontam,
         "line_dedup": line_dedup,
         "url_canon_dedup": url_canon_dedup,
@@ -2934,9 +2712,6 @@ FROM n
 """,
         "sample_quota": sample_quota,
         "sample_temperature": sample_temperature,
-        "embed_pool": __import__(
-            "swiftsoup_spark.ops.similarity",
-            fromlist=["pool_embeddings_sql"]).pool_embeddings_sql(),
         "crawl_frontier": __import__(
             "swiftsoup_spark.ops.crawl",
             fromlist=["crawl_frontier_sql"]).crawl_frontier_sql(
@@ -3169,18 +2944,6 @@ SELECT {URL_SQL} AS url, o.idx, o.prop,
 FROM documents
 CROSS JOIN (VALUES (0, 'og:title'), (1, 'og:type')) AS o(idx, prop)
 """,
-        "embed_decontam": """
-WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-           FROM embeddings),
-b AS (SELECT CAST(embedding AS DOUBLE[]) AS bv FROM embeddings
-      WHERE vec_id < 16),
-s AS (SELECT c.vec_id,
-             CAST(round(round(list_cosine_similarity(c.v, b.bv), 4)
-                        * 10000) AS BIGINT) AS sim_e4
-      FROM c CROSS JOIN b),
-m AS (SELECT vec_id, max(sim_e4) AS max_sim_e4 FROM s GROUP BY 1)
-SELECT vec_id, max_sim_e4, max_sim_e4 >= 9500 AS contaminated FROM m
-""",
         "split_assign": __import__(
             "swiftsoup_spark.ops.mixing",
             fromlist=["split_assign_sql"]).split_assign_sql(),
@@ -3235,42 +2998,6 @@ SELECT source || '.docs.test' AS host,
        CAST(sum(length({HTML_SQL})) AS BIGINT) AS total_bytes,
        CAST(count(DISTINCT lang) AS BIGINT) AS n_langs
 FROM documents GROUP BY 1
-""",
-        "semdedup": """
-WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-              WHERE vec_id < 300),
-u AS (SELECT vec_id, v FROM base
-      UNION ALL
-      SELECT vec_id + 100000 AS vec_id, list_transform(v, x -> x + 0.02) AS v
-      FROM base WHERE vec_id % 3 = 0),
-rk AS (SELECT vec_id, v,
-              row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS r
-       FROM u),
-seeds AS (SELECT r - 1 AS sid, v AS sv FROM rk WHERE r <= 8),
-a1 AS (SELECT vec_id, v, sid AS cid FROM (
-         SELECT u.vec_id, u.v, s.sid,
-                row_number() OVER (PARTITION BY u.vec_id
-                     ORDER BY list_cosine_similarity(u.v, s.sv) DESC, s.sid) AS rn
-         FROM u, seeds s) t WHERE rn = 1),
-comp AS (SELECT cid, dim, round(avg(val), 9) AS av FROM (
-           SELECT cid, unnest(v) AS val, generate_subscripts(v, 1) - 1 AS dim
-           FROM a1) t
-         GROUP BY cid, dim),
-cent AS (SELECT s.sid AS cid, coalesce(c.cv, s.sv) AS cv FROM seeds s
-         LEFT JOIN (SELECT cid, list(av ORDER BY dim) AS cv
-                    FROM comp GROUP BY cid) c ON c.cid = s.sid),
-asg AS (SELECT vec_id, v, cid FROM (
-          SELECT u.vec_id, u.v, c.cid,
-                 row_number() OVER (PARTITION BY u.vec_id
-                      ORDER BY list_cosine_similarity(u.v, c.cv) DESC, c.cid) AS rn
-          FROM u, cent c) t WHERE rn = 1),
-drp AS (SELECT DISTINCT b.vec_id AS j
-        FROM asg a JOIN asg b ON a.cid = b.cid AND a.vec_id < b.vec_id
-        WHERE CAST(round(round(list_cosine_similarity(a.v, b.v), 4) * 10000)
-                   AS BIGINT) >= 9500)
-SELECT CAST(asg.vec_id AS INTEGER) AS vec_id, CAST(asg.cid AS INTEGER) AS cid,
-       drp.j IS NULL AS kept
-FROM asg LEFT JOIN drp ON asg.vec_id = drp.j
 """,
         "paragraph_dedup": """
 WITH t AS (SELECT doc_id,

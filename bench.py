@@ -477,7 +477,7 @@ def _headline_subprocess(n_cores: int, n_execs: int = 0):
 # tails and recorded "parsed": null) goes to BENCH_LOCAL.json instead
 HEADLINE_QUERIES = (
     "extract_text", "extract_main_text", "prepare_shard", "dedup_exact",
-    "minhash_lsh_pairs", "near_dup_clusters", "ann_ivf", "lang_detect",
+    "minhash_lsh_pairs", "near_dup_clusters", "lang_detect",
     "quality_gopher", "lm_score", "url_canon_dedup", "clean_basic",
 )
 

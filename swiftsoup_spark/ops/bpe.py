@@ -13,10 +13,9 @@ SentencePiece / HF tokenizers):
   (vocabulary-sized, Zipf-small relative to the corpus);
 * each merge round is one partial-aggregable groupBy over the VOCAB's
   adjacent pairs weighted by word count, a TakeOrdered(1) scalar to
-  the driver (the argmax pair — same driver-scalar convention as
-  similarity.train_centroids), and a map-only literal replace over the
-  vocab column. Text never rides any shuffle; rounds are sequential by
-  definition of the algorithm.
+  the driver (the argmax pair), and a map-only literal replace over
+  the vocab column. Text never rides any shuffle; rounds are
+  sequential by definition of the algorithm.
 
 Symbol-state encoding: a word's current segmentation is kept as a
 single string with double-comma separators and wraps —

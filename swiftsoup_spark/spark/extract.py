@@ -241,8 +241,9 @@ def extract_pages(pages_df, css_scope: str | None = None, keep_cols: tuple = (),
     :func:`_extract_column`: the C streaming tier, then the C arena
     tier per refused document, then the Python kernel only where both
     bail. ``metrics=True`` adds exact (n_nodes, parse_errors) columns
-    (used by the resumable pipeline's lineage manifests); they come
-    from the C arena tier, so each document starts there.
+    (the resumable pipeline writes them into its extracted table, not
+    its manifest); they come from the C arena tier, so each document
+    starts there.
     """
     src = pages_df.select("url", *keep_cols, "html")
     keep_fields = [f for f in src.schema.fields if f.name != "html"]

@@ -29,8 +29,10 @@ pathological hosts, an optional salt column.
 
 from __future__ import annotations
 
+import operator
 import os
 import uuid
+from functools import reduce
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -164,9 +166,10 @@ def run_extraction(spark, pages_df, out_dir: str, n_buckets: int = 32,
     if salt > 1:
         todo = todo.repartition(n_buckets * salt, "bucket",
                                 F.pmod(F.xxhash64("url", F.lit(1)), F.lit(salt)))
-    # metrics=True: the lineage manifest wants exact (n_nodes,
-    # parse_errors); the C arena tier counts them, so each document
-    # starts at that tier (the Python kernel only where it bails)
+    # metrics=True: the extracted table carries exact per-doc (n_nodes,
+    # parse_errors) columns (the manifest does not); the C arena tier
+    # counts them, so each document starts at that tier (the Python
+    # kernel only where it bails)
     extracted = extract_pages(todo, css_scope, keep_cols=("bucket",),
                               metrics=True)
     out = extracted.select("bucket", "url", "text", "n_nodes", "parse_errors")
@@ -192,9 +195,11 @@ def run_extraction(spark, pages_df, out_dir: str, n_buckets: int = 32,
     return _manifest_df(spark, out_dir)
 
 
-def corpus_checksum(spark, out_dir: str) -> int:
-    """Order-independent whole-corpus checksum (the N-vs-4N oracle)."""
-    m = spark.read.parquet(_manifest_path(out_dir))
-    row = m.agg(F.expr("bit_xor(checksum)").alias("c"),
-                F.sum("row_count").alias("n")).collect()[0]
-    return (row.c or 0, row.n or 0)
+def corpus_checksum(spark, out_dir: str) -> tuple[int, int]:
+    """Order-independent whole-corpus (checksum, row count): the N-vs-4N
+    oracle. The manifest (at most ``n_buckets`` rows) is read on the
+    driver; XOR of int64 values stays in int64, as Spark's ``bit_xor``."""
+    t = pq.read_table(_manifest_path(out_dir),
+                      columns=["row_count", "checksum"], schema=MANIFEST_SCHEMA)
+    return (reduce(operator.xor, t["checksum"].to_pylist(), 0),
+            sum(t["row_count"].to_pylist()))

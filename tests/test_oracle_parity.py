@@ -13,7 +13,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.001")
-TABLES = ["documents", "embeddings"]
+TABLES = ["documents"]
 
 
 @pytest.fixture(scope="module")

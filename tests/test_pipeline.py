@@ -233,6 +233,39 @@ def test_manifest_schema_mixed_writers(spark, finished, tmp_path):
     assert P.done_buckets(spark, out) == set(range(8))
 
 
+def test_corpus_checksum_matches_spark_bit_xor(spark, finished, tmp_path):
+    """The driver-side checksum is Spark's ``bit_xor(checksum)`` and
+    ``sum(row_count)`` over the same manifest, negative int64 values and
+    their extremes included; an empty manifest reads (0, 0)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+    from swiftsoup_spark.spark import pipeline as P
+
+    def spark_side(out):
+        row = spark.read.parquet(os.path.join(out, P.MANIFEST)).agg(
+            F.expr("bit_xor(checksum)"), F.sum("row_count")).collect()[0]
+        return (row[0], row[1])
+
+    assert P.corpus_checksum(spark, finished[1]) == spark_side(finished[1])
+
+    out = str(tmp_path / "out")
+    mdir = os.path.join(out, P.MANIFEST)
+    os.makedirs(mdir)
+    cks = [-5, 3, -(2 ** 63), 2 ** 63 - 1]
+    pq.write_table(pa.Table.from_pydict(
+        {"bucket": list(range(4)), "row_count": [1, 2, 3, 4],
+         "byte_count": [0] * 4, "checksum": cks, "status": ["done"] * 4},
+        schema=P.MANIFEST_SCHEMA), os.path.join(mdir, "part-0.parquet"))
+    assert P.corpus_checksum(spark, out) == spark_side(out)
+
+    empty = str(tmp_path / "empty")
+    os.makedirs(os.path.join(empty, P.MANIFEST))
+    pq.write_table(P.MANIFEST_SCHEMA.empty_table(),
+                   os.path.join(empty, P.MANIFEST, "part-0.parquet"))
+    assert P.corpus_checksum(spark, empty) == (0, 0)
+
+
 def test_parallelism_determinism(tmp_path_factory):
     """Same input, two parallelism levels → identical corpus checksums
     (the sandbox stand-in for the N vs 4N cluster-size oracle).

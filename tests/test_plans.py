@@ -56,14 +56,6 @@ def test_extraction_has_no_shuffle(spark, tmp_path_factory):
     assert "MapInArrow" in plan or "ArrowEvalPython" in plan
 
 
-def test_ann_broadcasts_query_side(spark):
-    from swiftsoup_spark.ops.similarity import brute_force_topk
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    df = brute_force_topk(emb)
-    plan = _plan(df)
-    assert "Broadcast" in plan, plan
-
-
 def test_exact_dedup_partial_aggregation(spark):
     """groupBy(md5) must partial-aggregate map-side before the shuffle."""
     from swiftsoup_spark.ops.dedup import exact_dedup

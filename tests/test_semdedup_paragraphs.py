@@ -1,12 +1,6 @@
-"""Gates for the round-5 tail ops: SemDeDup semantic dedup
-(ops/similarity.semdedup), in-document paragraph repetition removal
-(ops/dedup.dedup_paragraphs) and the perplexity-bucket corpus filter
-(ops/ngramlm.perplexity_filter).
-
-semdedup: planted near-duplicate copies (cosine ~0.99 with their
-source) must be DROPPED while their lower-id sources survive; noise
-vectors all survive; the pair stage is an intra-cluster equi join —
-no CartesianProduct in the plan.
+"""Gates for two round-5 tail ops: in-document paragraph repetition
+removal (ops/dedup.dedup_paragraphs) and the perplexity-bucket corpus
+filter (ops/ngramlm.perplexity_filter).
 
 dedup_paragraphs: keep-first semantics on crafted paragraph lists,
 and the whole operator is a map-only projection (no Exchange).
@@ -18,14 +12,10 @@ low-bits docs keep; thresholds are inclusive bounds.
 import os
 import sys
 
-import numpy as np
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
-
-from swiftsoup_spark.ops import similarity as S  # noqa: E402
 from swiftsoup_spark.ops.dedup import dedup_paragraphs  # noqa: E402
 from swiftsoup_spark.ops.ngramlm import (  # noqa: E402
     char_ngram_model, perplexity_filter)
@@ -34,49 +24,7 @@ from swiftsoup_spark.ops.ngramlm import (  # noqa: E402
 @pytest.fixture(scope="module")
 def spark():
     from swiftsoup_spark.spark.session import get_spark
-    yield get_spark(master="local[4]", app="semdedup-test")
-
-
-@pytest.fixture(scope="module")
-def planted(spark):
-    """90 unit noise vectors + an almost-identical copy of every third
-    one (id + 1000): copies sit at cosine ~0.999 with their source."""
-    rng = np.random.default_rng(7)
-    d = 64
-    base = rng.normal(size=(90, d))
-    base /= np.linalg.norm(base, axis=1, keepdims=True)
-    rows = [(int(i), [float(x) for x in base[i]]) for i in range(90)]
-    for i in range(0, 90, 3):
-        pert = base[i] + 0.005 * rng.normal(size=d)
-        rows.append((int(i) + 1000, [float(x) for x in pert]))
-    return spark.createDataFrame(
-        rows, "vec_id: long, embedding: array<double>")
-
-
-def test_semdedup_drops_planted_copies(spark, planted):
-    out = {r["vec_id"]: r for r in S.semdedup(
-        planted, n_clusters=6, threshold_e4=9500).collect()}
-    assert len(out) == 120
-    for i in range(0, 90, 3):
-        assert out[i]["kept"], f"source {i} must survive"
-        assert not out[i + 1000]["kept"], f"copy {i + 1000} must drop"
-        # a near-identical pair can only drop if both land in one cluster
-        assert out[i]["cid"] == out[i + 1000]["cid"]
-    for i in range(90):
-        if i % 3 != 0:
-            assert out[i]["kept"], f"noise vector {i} must survive"
-
-
-def test_semdedup_deterministic(spark, planted):
-    a = sorted(map(tuple, S.semdedup(planted, n_clusters=6).collect()))
-    b = sorted(map(tuple, S.semdedup(planted, n_clusters=6).collect()))
-    assert a == b
-
-
-def test_semdedup_no_cartesian(spark, planted):
-    df = S.semdedup(planted, n_clusters=6)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
+    yield get_spark(master="local[4]", app="paragraph-dedup-test")
 
 
 def test_paragraph_dedup_keeps_first(spark):
