@@ -6743,6 +6743,167 @@ static PyObject *py_batch_md5_prefix64(PyObject *self, PyObject *args) {
     return r;
 }
 
+/* ---- XXH64 (implemented from the xxHash specification) ---------------
+ * Spark's ``xxhash64`` of a string column is XXH64 over its UTF-8 bytes
+ * with seed 42; the resumable pipeline's manifest checksum is
+ * ``bit_xor(xxhash64(concat_ws("\0", url, text)))`` per bucket, and the
+ * write job computes the per-row hashes here instead of re-reading the
+ * written files. */
+#define XXP1 11400714785074694791ULL
+#define XXP2 14029467366897019727ULL
+#define XXP3 1609587929392839161ULL
+#define XXP4 9650029242287828579ULL
+#define XXP5 2870177450012600261ULL
+
+static inline uint64_t xx_rotl(uint64_t x, int r) {
+    return (x << r) | (x >> (64 - r));
+}
+static inline uint64_t xx_rd64(const uint8_t *p) {
+    uint64_t v = 0;
+    for (int k = 7; k >= 0; k--) v = (v << 8) | p[k];
+    return v;
+}
+static inline uint64_t xx_rd32(const uint8_t *p) {
+    return (uint64_t)p[0] | ((uint64_t)p[1] << 8) |
+           ((uint64_t)p[2] << 16) | ((uint64_t)p[3] << 24);
+}
+static inline uint64_t xx_round(uint64_t acc, uint64_t in) {
+    acc += in * XXP2;
+    return xx_rotl(acc, 31) * XXP1;
+}
+static inline uint64_t xx_merge(uint64_t h, uint64_t v) {
+    h ^= xx_round(0, v);
+    return h * XXP1 + XXP4;
+}
+
+static uint64_t xxh64(const uint8_t *p, size_t len, uint64_t seed) {
+    const uint8_t *end = p + len;
+    uint64_t h;
+    if (len >= 32) {
+        uint64_t v1 = seed + XXP1 + XXP2, v2 = seed + XXP2, v3 = seed,
+                 v4 = seed - XXP1;
+        const uint8_t *lim = end - 32;
+        do {
+            v1 = xx_round(v1, xx_rd64(p));
+            v2 = xx_round(v2, xx_rd64(p + 8));
+            v3 = xx_round(v3, xx_rd64(p + 16));
+            v4 = xx_round(v4, xx_rd64(p + 24));
+            p += 32;
+        } while (p <= lim);
+        h = xx_rotl(v1, 1) + xx_rotl(v2, 7) + xx_rotl(v3, 12) +
+            xx_rotl(v4, 18);
+        h = xx_merge(h, v1); h = xx_merge(h, v2);
+        h = xx_merge(h, v3); h = xx_merge(h, v4);
+    } else {
+        h = seed + XXP5;
+    }
+    h += (uint64_t)len;
+    for (; p + 8 <= end; p += 8) {
+        h ^= xx_round(0, xx_rd64(p));
+        h = xx_rotl(h, 27) * XXP1 + XXP4;
+    }
+    if (p + 4 <= end) {
+        h ^= xx_rd32(p) * XXP1;
+        h = xx_rotl(h, 23) * XXP2 + XXP3;
+        p += 4;
+    }
+    for (; p < end; p++) {
+        h ^= (uint64_t)(*p) * XXP5;
+        h = xx_rotl(h, 11) * XXP1;
+    }
+    h ^= h >> 33; h *= XXP2;
+    h ^= h >> 29; h *= XXP3;
+    h ^= h >> 32;
+    return h;
+}
+
+/* one Arrow utf8 column's raw buffers, as batch_extract takes them; an
+ * empty validity buffer means no nulls */
+typedef struct {
+    Py_buffer data, offs, valid;
+    Py_ssize_t arr_offset;
+    int large;
+} ArrowStr;
+
+static int as_row(const ArrowStr *c, Py_ssize_t i, const uint8_t **s,
+                  size_t *len) {
+    Py_ssize_t j = c->arr_offset + i;
+    if (c->valid.len &&
+        !(((const uint8_t *)c->valid.buf)[j >> 3] & (1 << (j & 7))))
+        return 0;
+    Py_ssize_t s0, s1;
+    if (c->large) {
+        s0 = ((const int64_t *)c->offs.buf)[j];
+        s1 = ((const int64_t *)c->offs.buf)[j + 1];
+    } else {
+        s0 = ((const int32_t *)c->offs.buf)[j];
+        s1 = ((const int32_t *)c->offs.buf)[j + 1];
+    }
+    *s = (const uint8_t *)c->data.buf + s0;
+    *len = (size_t)(s1 - s0);
+    return 1;
+}
+
+/* batch_xxhash64_concat_ws(a_data, a_offs, a_valid, a_offset, a_large,
+ *                          b_data, b_offs, b_valid, b_offset, b_large,
+ *                          n: int, seed: int) -> bytes
+ *
+ * Per row, Spark's ``xxhash64(concat_ws("\0", a, b))`` with the given
+ * seed: XXH64 over a's bytes, a NUL, b's bytes; a null value is left
+ * out with its separator, as concat_ws does. Returns n native int64
+ * values (numpy-frombuffer ready). */
+static PyObject *py_batch_xxhash64_concat_ws(PyObject *self, PyObject *args) {
+    ArrowStr a, b;
+    Py_ssize_t n;
+    unsigned long long seed;
+    if (!PyArg_ParseTuple(args, "y*y*y*npy*y*y*npnK",
+                          &a.data, &a.offs, &a.valid, &a.arr_offset, &a.large,
+                          &b.data, &b.offs, &b.valid, &b.arr_offset, &b.large,
+                          &n, &seed))
+        return NULL;
+    uint64_t *out = PyMem_Malloc((n > 0 ? n : 1) * sizeof(uint64_t));
+    size_t cap = 256;
+    uint8_t *buf = PyMem_Malloc(cap);
+    PyObject *r = NULL;
+    if (!out || !buf) {
+        PyErr_NoMemory();
+        goto done;
+    }
+    for (Py_ssize_t i = 0; i < n; i++) {
+        const uint8_t *sa = NULL, *sb = NULL;
+        size_t la = 0, lb = 0;
+        int ha = as_row(&a, i, &sa, &la), hb = as_row(&b, i, &sb, &lb);
+        if (!(ha && hb)) {          /* one part or none: hash in place */
+            out[i] = ha ? xxh64(sa, la, seed) : xxh64(sb, lb, seed);
+            continue;
+        }
+        size_t need = la + 1 + lb;
+        if (need > cap) {
+            while (cap < need) cap *= 2;
+            uint8_t *nb = PyMem_Realloc(buf, cap);
+            if (!nb) {
+                PyErr_NoMemory();
+                goto done;
+            }
+            buf = nb;
+        }
+        memcpy(buf, sa, la);
+        buf[la] = 0;
+        memcpy(buf + la + 1, sb, lb);
+        out[i] = xxh64(buf, need, seed);
+    }
+    r = PyBytes_FromStringAndSize((const char *)out,
+                                  n * (Py_ssize_t)sizeof(uint64_t));
+done:
+    PyMem_Free(out);
+    PyMem_Free(buf);
+    PyBuffer_Release(&a.data); PyBuffer_Release(&a.offs);
+    PyBuffer_Release(&a.valid);
+    PyBuffer_Release(&b.data); PyBuffer_Release(&b.offs);
+    PyBuffer_Release(&b.valid);
+    return r;
+}
+
 static PyMethodDef methods[] = {
     {"init_tables", py_init_tables, METH_VARARGS,
      "init tag/entity tables (once per process)"},
@@ -6752,6 +6913,9 @@ static PyMethodDef methods[] = {
      "batch over raw Arrow utf8 buffers; returns arrow-ready buffers"},
     {"batch_md5_prefix64", py_batch_md5_prefix64, METH_VARARGS,
      "per-string uint64 md5 prefix over raw Arrow utf8 buffers"},
+    {"batch_xxhash64_concat_ws", py_batch_xxhash64_concat_ws, METH_VARARGS,
+     "per-row Spark xxhash64(concat_ws(NUL, a, b)) over raw Arrow utf8\n"
+     "buffers"},
     {"init_pyids", py_init_pyids, METH_VARARGS,
      "python TagRegistry ids aligned with the C tag table"},
     {"build_arena", py_build_arena, METH_VARARGS,

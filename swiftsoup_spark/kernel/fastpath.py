@@ -419,6 +419,40 @@ def batch_md5_prefix64(col):
     return np.frombuffer(raw, dtype=np.uint64)
 
 
+def _str_buffers(col):
+    """(data, offsets, validity, offset, large) of a ``pyarrow`` string
+    or large_string array, validity ``b""`` when it has no nulls; None
+    for any other type."""
+    import pyarrow as pa
+
+    if col.type not in (pa.string(), pa.large_string()):
+        return None
+    valid, offs, data = col.buffers()
+    return (data if data is not None else b"",
+            offs if offs is not None else b"",
+            valid if valid is not None and col.null_count else b"",
+            col.offset, col.type == pa.large_string())
+
+
+def batch_xxhash64_concat_ws(a, b):
+    """Per row, Spark's ``xxhash64(concat_ws("\\0", a, b))`` over two
+    equal-length ``pyarrow`` string arrays (nulls left out, as
+    ``concat_ws`` does), computed in C over the raw Arrow buffers.
+    Returns a numpy int64 array, or ``None`` when the native module is
+    unavailable / a column is not a string array — callers then hash in
+    Python."""
+    import numpy as np
+
+    m = get_module()
+    if m is None or not hasattr(m, "batch_xxhash64_concat_ws"):
+        return None
+    ba, bb = _str_buffers(a), _str_buffers(b)
+    if ba is None or bb is None or len(a) != len(b):
+        return None
+    raw = m.batch_xxhash64_concat_ws(*ba, *bb, len(a), 42)  # Spark's seed
+    return np.frombuffer(raw, dtype=np.int64)
+
+
 def batch_doc_text(col, scope_id: str | None = None):
     """Batch fast path over a ``pyarrow`` string array.
 

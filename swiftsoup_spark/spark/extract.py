@@ -240,10 +240,11 @@ def extract_pages(pages_df, css_scope: str | None = None, keep_cols: tuple = (),
     (url, html, *keep_cols). Each batch goes through
     :func:`_extract_column`: the C streaming tier, then the C arena
     tier per refused document, then the Python kernel only where both
-    bail. ``metrics=True`` adds exact (n_nodes, parse_errors) columns
-    (the resumable pipeline writes them into its extracted table, not
-    its manifest); they come from the C arena tier, so each document
-    starts there.
+    bail. ``metrics=True`` adds exact (n_nodes, parse_errors) columns,
+    the per-doc columns of the resumable pipeline's extracted table
+    (whose own stage, ``pipeline._extract_stage``, calls
+    :func:`_extract_column` the same way); they come from the C arena
+    tier, so each document starts there.
     """
     src = pages_df.select("url", *keep_cols, "html")
     keep_fields = [f for f in src.schema.fields if f.name != "html"]

@@ -30,12 +30,13 @@ def stream_extract(spark, in_dir: str, out_dir: str, checkpoint_dir: str,
 
     def process_batch(df, epoch_id: int):
         # idempotent micro-batch commit: epoch-partitioned dynamic
-        # overwrite — a replayed epoch replaces rather than appends
-        df.sparkSession.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic")
+        # overwrite — a replayed epoch replaces rather than appends; a
+        # per-write option, so the session's own mode is left alone
         ex = extract_pages(df, css_scope)
         (ex.withColumn("epoch", F.lit(epoch_id))
-           .write.mode("overwrite").partitionBy("epoch")
+           .write.mode("overwrite")
+           .option("partitionOverwriteMode", "dynamic")
+           .partitionBy("epoch")
            .parquet(os.path.join(out_dir, "extracted")))
 
     writer = (src.writeStream

@@ -1,7 +1,9 @@
 """Resumable-pipeline tests: bucketing, lineage manifest, idempotent
 resume, crash injection into the manifest commit, and the N-vs-4N
 determinism oracle (identical corpus checksums at two parallelism
-levels)."""
+levels). The write job sums each bucket's manifest row itself; the
+oracle for those rows is the grouped Spark aggregation over the written
+files that the pipeline once ran after every write (``_readback``)."""
 
 import glob
 import os
@@ -33,6 +35,7 @@ def test_run_and_resume(spark, tmp_path_factory):
 
     man = P.run_extraction(spark, pages, out, n_buckets=8)
     rows = man.collect()
+    assert sorted(tuple(r) for r in rows) == _readback(spark, out)
     assert {r.bucket for r in rows} == set(range(8))
     assert sum(r.row_count for r in rows) == n_total
     assert all(r.status == "done" for r in rows)
@@ -48,6 +51,9 @@ def test_run_and_resume(spark, tmp_path_factory):
     # resume: only the 3 missing buckets are recomputed; result identical
     man2 = P.run_extraction(spark, pages, out, n_buckets=8)
     assert sorted(r.bucket for r in man2.collect()) == list(range(8))
+    # the Spark-written file of the earlier run and this run's file
+    # together hold what the written files hold
+    assert sorted(tuple(r) for r in man2.collect()) == _readback(spark, out)
     cks2, n2 = P.corpus_checksum(spark, out)
     assert (cks2, n2) == (cks_full, n_full)
 
@@ -109,6 +115,55 @@ def _manifest_files(out):
     return set(glob.glob(os.path.join(out, P.MANIFEST, "*.parquet")))
 
 
+def _manifest_rows(path):
+    """Sorted row tuples of a manifest directory or file."""
+    import pyarrow.parquet as pq
+    from swiftsoup_spark.spark import pipeline as P
+    t = pq.read_table(path, schema=P.MANIFEST_SCHEMA)
+    return sorted(tuple(r.values()) for r in t.to_pylist())
+
+
+def _readback(spark, out, buckets=None):
+    """The oracle: manifest rows re-derived from the written files by a
+    Spark aggregation, for ``buckets`` (default all), as sorted tuples."""
+    from pyspark.sql import functions as F
+    written = spark.read.parquet(os.path.join(out, "extracted"))
+    if buckets is not None:
+        written = written.filter(F.col("bucket").isin(list(buckets)))
+    man = (written.groupBy("bucket")
+           .agg(F.count("*").alias("row_count"),
+                F.sum(F.length("text")).alias("byte_count"),
+                F.expr('bit_xor(xxhash64(concat_ws("\\u0000", url, text)))')
+                 .alias("checksum"))
+           .withColumn("status", F.lit("done")))
+    return sorted(tuple(r) for r in man.collect())
+
+
+def _drop_buckets(out, buckets):
+    """Rewrite the manifest as one file without ``buckets``' rows."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from swiftsoup_spark.spark import pipeline as P
+    mdir = os.path.join(out, P.MANIFEST)
+    t = pq.read_table(mdir)
+    keep = t.filter(pc.invert(pc.is_in(t["bucket"],
+                                       value_set=_int32(list(buckets)))))
+    shutil.rmtree(mdir)
+    os.makedirs(mdir)
+    pq.write_table(keep, os.path.join(mdir, "part-00000.parquet"))
+
+
+def _jobs_of(spark, group, fn):
+    """The ids of the Spark jobs ``fn()`` starts."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
 def test_noop_rerun_starts_no_spark_job(spark, finished, tmp_path):
     from swiftsoup_spark.spark import pipeline as P
 
@@ -134,19 +189,12 @@ def test_crash_in_commit_redoes_only_that_runs_buckets(
     """The commit raises after the data write: the next run redoes
     exactly the buckets of the crashed run, and the corpus checksum is
     that of an uninterrupted run."""
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
     from swiftsoup_spark.spark import pipeline as P
 
     pages, _, _, cks_full = finished
     out = _copy(finished, tmp_path)
-    mdir = os.path.join(out, P.MANIFEST)
-    t = pq.read_table(mdir)
-    keep = t.filter(pc.invert(pc.is_in(t["bucket"],
-                                       value_set=_int32([1, 3, 5]))))
-    shutil.rmtree(mdir)
-    os.makedirs(mdir)
-    pq.write_table(keep, os.path.join(mdir, "part-00000.parquet"))
+    _drop_buckets(out, [1, 3, 5])
     kept = {0, 2, 4, 6, 7}
 
     def crash(out_dir, rows):
@@ -164,6 +212,8 @@ def test_crash_in_commit_redoes_only_that_runs_buckets(
     assert {b for b in after if after[b] != before_data[b]} == {1, 3, 5}
     (new,) = _manifest_files(out) - before_man
     assert sorted(pq.read_table(new)["bucket"].to_pylist()) == [1, 3, 5]
+    assert _manifest_rows(new) == _readback(spark, out, [1, 3, 5])
+    assert _manifest_rows(os.path.join(out, P.MANIFEST)) == _readback(spark, out)
     assert P.corpus_checksum(spark, out) == cks_full
 
 
@@ -266,6 +316,125 @@ def test_corpus_checksum_matches_spark_bit_xor(spark, finished, tmp_path):
     assert P.corpus_checksum(spark, empty) == (0, 0)
 
 
+def _hash_cases():
+    """(url, text) pairs: nulls, empty text, non-ASCII, NUL, and joined
+    keys of every length from 0 to 40 bytes (XXH64's < 32-byte and
+    32-byte-stripe paths, and each 8/4/1-byte tail) plus long ones."""
+    rows = [(None, "text"), ("u", None), (None, None), ("", ""),
+            ("http://x/", ""), ("", "t"), ("h\u00e9", "\u4e2d\u6587 \U0001f600"),
+            ("a\x00b", "\x00"), ("\x00", "\x00\x00"),
+            ("https://example.com/" + "p" * 300, "\u00e9" * 5000)]
+    for n in range(41):
+        rows.append(("u" * (n // 2), "t" * (n - n // 2 - 1) if n else None))
+    return rows
+
+
+@pytest.mark.parametrize("native", [True, False], ids=["c", "python"])
+@pytest.mark.parametrize("large", [False, True], ids=["string", "large_string"])
+def test_row_checksums_match_spark_xxhash64(spark, monkeypatch, native, large):
+    """The write job's per-row hash is Spark's ``xxhash64(concat_ws(
+    "\\0", url, text))``, in C and in the pure-Python fallback, over
+    whole and sliced Arrow arrays."""
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+    from swiftsoup_spark.kernel import fastpath
+    from swiftsoup_spark.spark import pipeline as P
+
+    rows = _hash_cases()
+    want = [r[0] for r in spark.createDataFrame(
+        rows, "url string, text string").select(F.expr(
+            'xxhash64(concat_ws("\\u0000", url, text))')).collect()]
+    typ = pa.large_string() if large else pa.string()
+    url = pa.array([r[0] for r in rows], typ)
+    text = pa.array([r[1] for r in rows], typ)
+    if native:
+        assert fastpath.batch_xxhash64_concat_ws(url, text) is not None
+    else:
+        monkeypatch.setattr(fastpath, "batch_xxhash64_concat_ws",
+                            lambda a, b: None)
+    assert P.row_checksums(url, text).tolist() == want
+    # sliced arrays: non-zero offsets into the offsets and validity buffers
+    for lo, hi in [(1, 5), (3, len(rows)), (9, 30)]:
+        got = P.row_checksums(url.slice(lo, hi - lo), text.slice(lo, hi - lo))
+        assert got.tolist() == want[lo:hi], (lo, hi)
+    assert P.row_checksums(url.slice(0, 0), text.slice(0, 0)).tolist() == []
+
+
+def test_fresh_run_and_resume_start_one_spark_job(spark, finished, tmp_path):
+    """The write is a run's only Spark job: no second job re-reads the
+    written files, yet the manifest holds what the readback gives. The
+    pages are read from parquet, so the input plan needs no job of its
+    own (``pages_df``'s repartition is a shuffle, a job of its own under
+    adaptive execution)."""
+    from swiftsoup_spark.spark import pipeline as P
+
+    _, _, rows, cks_full = finished
+    src = str(tmp_path / "pages")
+    finished[0].write.parquet(src)
+    pages = spark.read.parquet(src)
+    out = str(tmp_path / "fresh")
+    jobs = _jobs_of(spark, "fresh-run",
+                    lambda: P.run_extraction(spark, pages, out, n_buckets=8))
+    assert len(jobs) == 1, jobs
+    assert _manifest_rows(os.path.join(out, P.MANIFEST)) == _readback(spark, out)
+    assert _manifest_rows(os.path.join(out, P.MANIFEST)) == \
+        sorted(tuple(r) for r in rows)
+
+    _drop_buckets(out, [2, 4, 6])
+    before = _manifest_files(out)
+    jobs = _jobs_of(spark, "resume-run",
+                    lambda: P.run_extraction(spark, pages, out, n_buckets=8))
+    assert len(jobs) == 1, jobs
+    (new,) = _manifest_files(out) - before
+    assert _manifest_rows(new) == _readback(spark, out, [2, 4, 6])
+    assert P.corpus_checksum(spark, out) == cks_full
+
+
+def test_salt_gives_same_rows_manifest_and_checksum(spark, finished, tmp_path):
+    """``salt=3`` shuffles each bucket into three sub-tasks before the
+    kernel; the output, the manifest and the checksum are those of
+    ``salt=1``."""
+    from swiftsoup_spark.spark import pipeline as P
+
+    pages, base, rows, cks_full = finished
+    out = str(tmp_path / "salted")
+    man = P.run_extraction(spark, pages, out, n_buckets=8, salt=3)
+    assert sorted(man.collect()) == rows
+    assert _manifest_rows(os.path.join(out, P.MANIFEST)) == _readback(spark, out)
+    assert P.corpus_checksum(spark, out) == cks_full
+
+    def extracted(d):
+        cols = ["bucket", "url", "text", "n_nodes", "parse_errors"]
+        return sorted(spark.read.parquet(os.path.join(d, "extracted"))
+                      .select(*cols).collect())
+    assert extracted(out) == extracted(base)
+
+
+def test_run_leaves_session_overwrite_mode_alone(spark, finished, tmp_path):
+    """The bucket write asks for dynamic partition overwrite per write:
+    the session's ``partitionOverwriteMode`` stays as the caller set it,
+    and a resume under a static session mode still keeps the buckets it
+    does not redo."""
+    from swiftsoup_spark.spark import pipeline as P
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    pages, _, _, cks_full = finished
+    out = _copy(finished, tmp_path)
+    _drop_buckets(out, [0, 7])
+    before = _bucket_files(out)
+    old = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        P.run_extraction(spark, pages, out, n_buckets=8)
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, old)
+    after = _bucket_files(out)
+    assert sorted(after) == list(range(8))
+    assert {b for b in after if after[b] != before[b]} == {0, 7}
+    assert P.corpus_checksum(spark, out) == cks_full
+
+
 def test_parallelism_determinism(tmp_path_factory):
     """Same input, two parallelism levels → identical corpus checksums
     (the sandbox stand-in for the N vs 4N cluster-size oracle).
@@ -294,6 +463,72 @@ print(json.dumps(P.corpus_checksum(spark, out)))
         assert r.returncode == 0, r.stderr[-2000:]
         results.append(json.loads(r.stdout.strip().splitlines()[-1]))
     assert results[0] == results[1]
+
+
+def test_task_retry_counts_committed_rows_once(tmp_path):
+    """A task of the write job fails after the kernel has counted some of
+    its batches, and is retried (``local[2,2]``: two attempts per task):
+    the failed attempt's accumulator partials are dropped, so the
+    manifest equals the readback oracle and the corpus checksum that of
+    an undisturbed run. Runs in a subprocess (one JVM per master)."""
+    import json
+    import subprocess
+
+    script = r"""
+import json, os, sys, time
+sys.path.insert(0, %r)
+from pyspark import TaskContext
+from pyspark.sql import functions as F
+from swiftsoup_spark.spark.session import get_spark
+from swiftsoup_spark.spark.pages import pages_df
+from swiftsoup_spark.spark import pipeline as P
+work = sys.argv[1]
+# small Arrow batches and a small worker buffer, so the batches the
+# flaky stage passes on reach the kernel before the failure
+spark = get_spark(master="local[2,2]", app="retry", extra_conf={
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "8",
+    "spark.buffer.size": "1024"})
+src = os.path.join(work, "pages")
+pages_df(spark, %r).write.parquet(src)
+pages = spark.read.parquet(src)
+marker = os.path.join(work, "failed_once")
+
+def flaky(it):
+    ctx = TaskContext.get()
+    fail = ctx.partitionId() == 0 and ctx.attemptNumber() == 0
+    for i, batch in enumerate(it):
+        if fail and i == 20:
+            open(marker, "w").close()
+            time.sleep(1)   # the kernel downstream counts what it was passed
+            raise RuntimeError("injected task failure")
+        yield batch
+
+clean, retried = os.path.join(work, "clean"), os.path.join(work, "retried")
+P.run_extraction(spark, pages, clean, n_buckets=8)
+P.run_extraction(spark, pages.mapInArrow(flaky, pages.schema), retried,
+                 n_buckets=8)
+written = spark.read.parquet(os.path.join(retried, "extracted"))
+readback = written.groupBy("bucket").agg(
+    F.count("*"), F.sum(F.length("text")),
+    F.expr('bit_xor(xxhash64(concat_ws("\\u0000", url, text)))'),
+    F.lit("done")).collect()
+print(json.dumps({
+    "failed": os.path.exists(marker),
+    "manifest": sorted(list(r) for r in
+                       spark.read.parquet(os.path.join(retried, P.MANIFEST))
+                       .collect()),
+    "readback": sorted(list(r) for r in readback),
+    "clean": P.corpus_checksum(spark, clean),
+    "retried": P.corpus_checksum(spark, retried)}))
+""" % (ROOT, SF_DIR)
+    r = subprocess.run([sys.executable, "-c", script, str(tmp_path)],
+                       capture_output=True, text=True, timeout=300)
+    assert r.returncode == 0, r.stderr[-2000:]
+    got = json.loads(r.stdout.strip().splitlines()[-1])
+    assert got["failed"]
+    assert len(got["manifest"]) == 8
+    assert got["manifest"] == got["readback"]
+    assert got["retried"] == got["clean"]
 
 
 def test_table_format_seam_resolution():

@@ -50,11 +50,11 @@ def test_replayed_epoch_overwrites_not_appends(spark, tmp_path_factory):
     pages = pages_df(spark, SF_DIR).limit(50)
 
     def process_batch(df, epoch_id):
-        df.sparkSession.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic")
         ex = extract_pages(df, None)
         (ex.withColumn("epoch", F.lit(epoch_id))
-           .write.mode("overwrite").partitionBy("epoch")
+           .write.mode("overwrite")
+           .option("partitionOverwriteMode", "dynamic")
+           .partitionBy("epoch")
            .parquet(os.path.join(out_dir, "extracted")))
 
     process_batch(pages, 0)
