@@ -2792,45 +2792,248 @@ static PyObject *py_doc_text(PyObject *self, PyObject *args) {
     return result;
 }
 
-/* batch_extract(data, offsets, n, arr_offset, large) ->
+/* one Arrow string or binary column's raw buffers; an empty validity
+ * buffer means no nulls */
+typedef struct {
+    Py_buffer data, offs, valid;
+    Py_ssize_t arr_offset;
+    int large;
+} ArrowStr;
+
+static int as_row(const ArrowStr *c, Py_ssize_t i, const uint8_t **s,
+                  size_t *len) {
+    Py_ssize_t j = c->arr_offset + i;
+    if (c->valid.len &&
+        !(((const uint8_t *)c->valid.buf)[j >> 3] & (1 << (j & 7))))
+        return 0;
+    Py_ssize_t s0, s1;
+    if (c->large) {
+        s0 = ((const int64_t *)c->offs.buf)[j];
+        s1 = ((const int64_t *)c->offs.buf)[j + 1];
+    } else {
+        s0 = ((const int32_t *)c->offs.buf)[j];
+        s1 = ((const int32_t *)c->offs.buf)[j + 1];
+    }
+    *s = (const uint8_t *)c->data.buf + s0;
+    *len = (size_t)(s1 - s0);
+    return 1;
+}
+
+/* ---- the UTF-8 gate over binary html (api.decode_html's UTF-8 outcome) ----
+ * api.decode_html reads a UTF-8 BOM, then a UTF-16 BOM, then the first
+ * ``<meta ... charset=label`` of the first 1,024 bytes (_META_CHARSET),
+ * else defaults to UTF-8. The gate reproduces those checks and accepts a
+ * doc only when the decode is exactly its bytes read as UTF-8: no BOM or
+ * a UTF-8 BOM, no label or one of ``labels`` (every lower-case spelling
+ * that codecs.lookup maps to utf-8), valid UTF-8, no NUL byte. Anything
+ * else, a label the 1,024-byte head may cut included, is refused and
+ * decoded in Python. */
+
+#define GATE_REFUSED 255
+
+/* case-insensitive match of the lower-case ASCII word ``w`` at ``s`` */
+static int ci_word(const uint8_t *s, const char *w, int n) {
+    for (int k = 0; k < n; k++)
+        if ((s[k] | 0x20) != (uint8_t)w[k]) return 0;
+    return 1;
+}
+
+static int re_space(uint8_t c) {   /* \s of a bytes pattern */
+    return c == ' ' || c == '\t' || c == '\n' || c == '\r' || c == '\f' ||
+           c == '\v';
+}
+
+static int label_ch(uint8_t c) {   /* [a-zA-Z0-9_\-] */
+    return (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
+           (c >= '0' && c <= '9') || c == '_' || c == '-';
+}
+
+/* re.search of _META_CHARSET,
+ *   <meta[^>]+charset\s*=\s*["']?\s*([a-zA-Z0-9_\-]+)   (re.I)
+ * over h[0..hn): the leftmost ``<meta`` with a match wins, and within it
+ * the greedy [^>]+ makes the last ``charset`` before the tag's first
+ * '>' win. Returns 1 with the label at [*ls, *le), else 0. */
+static int meta_charset(const uint8_t *h, Py_ssize_t hn, Py_ssize_t *ls,
+                        Py_ssize_t *le) {
+    for (Py_ssize_t p = 0; p + 5 <= hn; p++) {
+        const uint8_t *lt = memchr(h + p, '<', (size_t)(hn - p));
+        if (!lt) return 0;
+        p = lt - h;
+        if (p + 5 > hn || !ci_word(h + p + 1, "meta", 4)) continue;
+        Py_ssize_t g = p + 5;                 /* the tag's first '>' */
+        while (g < hn && h[g] != '>') g++;
+        for (Py_ssize_t q = g - 7; q > p + 5; q--) {
+            if (!ci_word(h + q, "charset", 7)) continue;
+            Py_ssize_t k = q + 7;
+            while (k < hn && re_space(h[k])) k++;
+            if (k >= hn || h[k] != '=') continue;
+            k++;
+            while (k < hn && re_space(h[k])) k++;
+            if (k < hn && (h[k] == '"' || h[k] == '\'')) {
+                k++;
+                while (k < hn && re_space(h[k])) k++;
+            }
+            if (k >= hn || !label_ch(h[k])) continue;
+            *ls = k;
+            while (k < hn && label_ch(h[k])) k++;
+            *le = k;
+            return 1;
+        }
+    }
+    return 0;
+}
+
+/* 1 when s[0..n) is what CPython's strict UTF-8 decoder accepts: no
+ * overlong form, no surrogate, nothing above U+10FFFF */
+static int utf8_valid(const uint8_t *s, Py_ssize_t n) {
+    Py_ssize_t i = 0;
+    while (i < n) {
+        while (i + 8 <= n) {                  /* ASCII, 8 bytes a step */
+            uint64_t v;
+            memcpy(&v, s + i, 8);
+            if (v & 0x8080808080808080ULL) break;
+            i += 8;
+        }
+        if (i >= n) break;
+        uint8_t c = s[i];
+        if (c < 0x80) { i++; continue; }
+        int len = c < 0xC2 ? 0 : c < 0xE0 ? 2 : c < 0xF0 ? 3 : c < 0xF5 ? 4 : 0;
+        if (!len || i + len > n) return 0;
+        for (int k = 1; k < len; k++)
+            if ((s[i + k] & 0xC0) != 0x80) return 0;
+        uint8_t c1 = s[i + 1];
+        if ((c == 0xE0 && c1 < 0xA0) || (c == 0xED && c1 > 0x9F) ||
+            (c == 0xF0 && c1 < 0x90) || (c == 0xF4 && c1 > 0x8F))
+            return 0;
+        i += len;
+    }
+    return 1;
+}
+
+/* the gate on one doc: where its UTF-8 text starts (0, or 3 after a
+ * UTF-8 BOM), or GATE_REFUSED. ``labels`` is a tuple of lower-case
+ * bytes. */
+static int gate_doc(const uint8_t *d, Py_ssize_t n, PyObject *labels) {
+    int skip = 0;
+    /* a UTF-16 BOM (FF FE, FE FF) is never valid UTF-8: the validation
+     * below refuses it */
+    if (n >= 3 && d[0] == 0xEF && d[1] == 0xBB && d[2] == 0xBF) {
+        skip = 3;                             /* the BOM wins */
+    } else {
+        Py_ssize_t hn = n < 1024 ? n : 1024, ls, le;
+        if (meta_charset(d, hn, &ls, &le)) {
+            if (le == hn && hn < n) return GATE_REFUSED;   /* maybe cut */
+            uint8_t low[32];
+            Py_ssize_t ln = le - ls;
+            if (ln > (Py_ssize_t)sizeof(low)) return GATE_REFUSED;
+            for (Py_ssize_t k = 0; k < ln; k++) {
+                uint8_t c = d[ls + k];
+                low[k] = (c >= 'A' && c <= 'Z') ? (uint8_t)(c | 0x20) : c;
+            }
+            int known = 0;
+            for (Py_ssize_t k = 0; k < PyTuple_GET_SIZE(labels) && !known;
+                 k++) {
+                PyObject *lab = PyTuple_GET_ITEM(labels, k);
+                known = PyBytes_Check(lab) && PyBytes_GET_SIZE(lab) == ln &&
+                        memcmp(PyBytes_AS_STRING(lab), low, (size_t)ln) == 0;
+            }
+            if (!known) return GATE_REFUSED;
+        }
+    }
+    if (memchr(d + skip, 0, (size_t)(n - skip))) return GATE_REFUSED;
+    return utf8_valid(d + skip, n - skip) ? skip : GATE_REFUSED;
+}
+
+/* utf8_gate(data, offsets, validity, arr_offset, large, n,
+ *           labels: tuple[bytes, ...]) -> bytes[n]
+ *
+ * Per row of an Arrow binary / large_binary column, gate_doc's outcome;
+ * a null row reads 0 (its doc is ""). */
+static PyObject *py_utf8_gate(PyObject *self, PyObject *args) {
+    ArrowStr col;
+    Py_ssize_t n;
+    PyObject *labels;
+    if (!PyArg_ParseTuple(args, "y*y*y*npnO!", &col.data, &col.offs,
+                          &col.valid, &col.arr_offset, &col.large, &n,
+                          &PyTuple_Type, &labels))
+        return NULL;
+    PyObject *r = PyBytes_FromStringAndSize(NULL, n);
+    if (r) {
+        uint8_t *out = (uint8_t *)PyBytes_AS_STRING(r);
+        for (Py_ssize_t i = 0; i < n; i++) {
+            const uint8_t *d;
+            size_t len;
+            out[i] = as_row(&col, i, &d, &len)
+                ? (uint8_t)gate_doc(d, (Py_ssize_t)len, labels) : 0;
+        }
+    }
+    PyBuffer_Release(&col.data); PyBuffer_Release(&col.offs);
+    PyBuffer_Release(&col.valid);
+    return r;
+}
+
+/* batch_extract(data, offsets, validity, arr_offset, large, n,
+ *               scope_id|None, skip|None, decoded|None) ->
  *   (text_data: bytes, text_offsets: bytes[int32 (n+1)],
  *    title_data: bytes, title_offsets: bytes[int32 (n+1)],
  *    bail_mask: bytes[n], n_bails: int)
  *
- * Zero-copy batch interface over an Arrow StringArray's raw buffers:
- * no per-row Python objects on input, and the outputs are ready-made
- * Arrow utf8 buffers (pa.StringArray.from_buffers on the Python side).
- * Rows that bail get empty outputs and a set mask bit; the caller
- * re-runs only those through the Python kernel. */
+ * Zero-copy batch interface over an Arrow string or binary column's raw
+ * buffers: no per-row Python objects on input, and the outputs are
+ * ready-made Arrow utf8 buffers (pa.StringArray.from_buffers on the
+ * Python side). A null row reads as "". For a binary column, ``skip`` is
+ * utf8_gate's outcome: an accepted row is parsed in place from its
+ * skip-th byte on, and a refused row from the next str of ``decoded``
+ * (api.decode_html of the refused rows, in row order). Rows that bail get
+ * empty outputs and a set mask bit; the caller re-runs only those
+ * through the later tiers. */
 static PyObject *py_batch_extract(PyObject *self, PyObject *args) {
-    Py_buffer data, offs;
-    Py_ssize_t n, arr_offset;
-    int large;
+    ArrowStr col;
+    Py_ssize_t n;
     const char *scope = NULL;
     Py_ssize_t scope_len = 0;
-    if (!PyArg_ParseTuple(args, "y*y*nnp|z#", &data, &offs, &n, &arr_offset,
-                          &large, &scope, &scope_len))
+    PyObject *skip_o = Py_None, *decoded = Py_None;
+    if (!PyArg_ParseTuple(args, "y*y*y*npn|z#OO", &col.data, &col.offs,
+                          &col.valid, &col.arr_offset, &col.large, &n,
+                          &scope, &scope_len, &skip_o, &decoded))
         return NULL;
     if (scope && scope_len == 0) scope = NULL;
+    const uint8_t *skip = NULL;
+    Py_ssize_t n_dec = 0;
+    if (skip_o != Py_None) {
+        if (!PyBytes_Check(skip_o) || PyBytes_GET_SIZE(skip_o) != n ||
+            !PyList_Check(decoded)) {
+            PyBuffer_Release(&col.data); PyBuffer_Release(&col.offs);
+            PyBuffer_Release(&col.valid);
+            PyErr_SetString(PyExc_TypeError,
+                            "skip must be bytes[n] and decoded a list");
+            return NULL;
+        }
+        skip = (const uint8_t *)PyBytes_AS_STRING(skip_o);
+        n_dec = PyList_GET_SIZE(decoded);
+    }
     if (!g_ready) {
-        PyBuffer_Release(&data); PyBuffer_Release(&offs);
+        PyBuffer_Release(&col.data); PyBuffer_Release(&col.offs);
+        PyBuffer_Release(&col.valid);
         PyErr_SetString(PyExc_RuntimeError, "init_tables not called");
         return NULL;
     }
-    const uint8_t *base = (const uint8_t *)data.buf;
-    const int32_t *o32 = (const int32_t *)offs.buf;
-    const int64_t *o64 = (const int64_t *)offs.buf;
 
     Py_ssize_t total_in = 0;
     for (Py_ssize_t i = 0; i < n; i++) {
-        Py_ssize_t s0 = large ? o64[arr_offset + i] : o32[arr_offset + i];
-        Py_ssize_t s1 = large ? o64[arr_offset + i + 1] : o32[arr_offset + i + 1];
-        total_in += s1 - s0;
+        const uint8_t *d;
+        size_t len;
+        if (as_row(&col, i, &d, &len)) total_in += (Py_ssize_t)len;
+    }
+    for (Py_ssize_t k = 0; k < n_dec; k++) {
+        PyObject *u = PyList_GET_ITEM(decoded, k);
+        if (PyUnicode_Check(u)) total_in += 4 * PyUnicode_GET_LENGTH(u);
     }
 
     if (2 * total_in + 64 * (n + 1) > 2000000000L) {
         /* int32 Arrow offsets would overflow; caller falls back */
-        PyBuffer_Release(&data); PyBuffer_Release(&offs);
+        PyBuffer_Release(&col.data); PyBuffer_Release(&col.offs);
+        PyBuffer_Release(&col.valid);
         PyErr_SetString(PyExc_OverflowError, "batch too large");
         return NULL;
     }
@@ -2843,22 +3046,39 @@ static PyObject *py_batch_extract(PyObject *self, PyObject *args) {
     P *p = PyMem_Malloc(sizeof(P));
     if (p) { p->scratch = NULL; p->scratch_cap = 0; }
     if (!text_data || !text_off || !title_data || !title_off || !mask || !p) {
-        PyBuffer_Release(&data); PyBuffer_Release(&offs);
+        PyBuffer_Release(&col.data); PyBuffer_Release(&col.offs);
+        PyBuffer_Release(&col.valid);
         PyMem_Free(text_data); PyMem_Free(text_off); PyMem_Free(title_data);
         PyMem_Free(title_off); PyMem_Free(mask); PyMem_Free(p);
         return PyErr_NoMemory();
     }
-    Py_ssize_t tpos = 0, dpos = 0;
+    Py_ssize_t tpos = 0, dpos = 0, k_dec = 0;
     long n_bails = 0;
     text_off[0] = 0; title_off[0] = 0;
 
     for (Py_ssize_t i = 0; i < n; i++) {
-        Py_ssize_t s0 = large ? o64[arr_offset + i] : o32[arr_offset + i];
-        Py_ssize_t s1 = large ? o64[arr_offset + i + 1] : o32[arr_offset + i + 1];
-        const uint8_t *doc = base + s0;
-        Py_ssize_t dlen = s1 - s0;
+        const uint8_t *doc = (const uint8_t *)"";
+        size_t len = 0;
+        int have = 1;
+        if (as_row(&col, i, &doc, &len) && skip) {
+            if (skip[i] == GATE_REFUSED) {
+                Py_ssize_t ulen = 0;
+                const char *u = NULL;
+                PyObject *s = k_dec < n_dec ? PyList_GET_ITEM(decoded, k_dec)
+                                            : NULL;
+                k_dec++;
+                if (s && PyUnicode_Check(s))
+                    u = PyUnicode_AsUTF8AndSize(s, &ulen);
+                if (u) { doc = (const uint8_t *)u; len = (size_t)ulen; }
+                else { PyErr_Clear(); have = 0; }   /* -> a later tier */
+            } else {
+                doc += skip[i];
+                len -= skip[i];
+            }
+        }
+        Py_ssize_t dlen = (Py_ssize_t)len;
         int bailed = 1;
-        if (!memchr(doc, 0, dlen)) {
+        if (have && !memchr(doc, 0, dlen)) {
             memset(p, 0, offsetof(P, unk_names));
             p->n_unk = 0;
             p->s = doc; p->n = dlen;
@@ -2906,7 +3126,8 @@ static PyObject *py_batch_extract(PyObject *self, PyObject *args) {
         text_off[i + 1] = (int32_t)tpos;
         title_off[i + 1] = (int32_t)dpos;
     }
-    PyBuffer_Release(&data); PyBuffer_Release(&offs);
+    PyBuffer_Release(&col.data); PyBuffer_Release(&col.offs);
+    PyBuffer_Release(&col.valid);
 
     PyObject *r = Py_BuildValue(
         "y#y#y#y#y#l",
@@ -3100,6 +3321,8 @@ typedef struct {
     int track_spans;
     int fragment_body;   /* parse_fragment(context='body') semantics */
     int bail;
+    int *walk;           /* DFS stack of the tree walks (nn + 1 ints),
+                          * allocated on first use, once per document */
 } AB;
 
 static void ab_bail(AB *ab) { ab->bail = 1; }
@@ -5902,6 +6125,7 @@ static int bprocess(AB *ab, Tok2 *t, int mode) {
 
 static void ab_free(AB *ab) {
     for (int i = 0; i < ab->nn; i++) iv_free(&ab->nodes[i].kids);
+    PyMem_Free(ab->walk);
     PyMem_Free(ab->nodes);
     PyMem_Free(ab->pool);
     PyMem_Free(ab->attrs);
@@ -6215,9 +6439,18 @@ static int an_ws_at(const uint8_t *p, size_t i, size_t n) {
     return 0;
 }
 
+/* the walk stack of a built arena: a node's kids are pushed only when it
+ * is popped, so a DFS never holds more than nn + 1 ids; NULL on
+ * allocation failure */
+static int *an_walk(AB *ab) {
+    if (!ab->walk)
+        ab->walk = (int *)PyMem_Malloc((size_t)(ab->nn + 1) * sizeof(int));
+    return ab->walk;
+}
+
 /* Arena.node_text over the C arena (kernel/arena.py:193-249) */
 static int an_node_text(AB *ab, int root, BBuf *out) {
-    int *stack = (int *)PyMem_Malloc((size_t)(ab->nn + 1) * sizeof(int));
+    int *stack = an_walk(ab);
     if (!stack) return 0;
     int top = 0;
     stack[top++] = root;
@@ -6242,7 +6475,7 @@ static int an_node_text(AB *ab, int root, BBuf *out) {
                 }
             }
             if (preserve) {
-                if (!bb_put(out, raw, rn)) { PyMem_Free(stack); return 0; }
+                if (!bb_put(out, raw, rn)) return 0;
                 nonempty = 1;
                 last_space = raw[rn - 1] == ' ';
             } else {
@@ -6253,7 +6486,7 @@ static int an_node_text(AB *ab, int root, BBuf *out) {
                 if (w) {
                     while (i < rn && (w = an_ws_at(raw, i, rn)) != 0) i += w;
                     if (nonempty && !last_space) {
-                        if (!bb_putc(out, ' ')) { PyMem_Free(stack); return 0; }
+                        if (!bb_putc(out, ' ')) return 0;
                         wrote = 1;
                         last_space = 1;
                     }
@@ -6263,15 +6496,13 @@ static int an_node_text(AB *ab, int root, BBuf *out) {
                     if (w) {
                         while (i < rn && (w = an_ws_at(raw, i, rn)) != 0)
                             i += w;
-                        if (!bb_putc(out, ' ')) { PyMem_Free(stack); return 0; }
+                        if (!bb_putc(out, ' ')) return 0;
                         wrote = 1;
                         last_space = 1;
                     } else {
                         size_t a = i;
                         while (i < rn && !an_ws_at(raw, i, rn)) i++;
-                        if (!bb_put(out, raw + a, i - a)) {
-                            PyMem_Free(stack); return 0;
-                        }
+                        if (!bb_put(out, raw + a, i - a)) return 0;
                         wrote = 1;
                         last_space = 0;
                     }
@@ -6283,14 +6514,13 @@ static int an_node_text(AB *ab, int root, BBuf *out) {
         if (nd->ntype == NT_ELEMENT) {
             uint32_t f = ab_flags(nd->tag);
             if (nonempty && !last_space && ((f & F_BLOCK) || nd->tag == T_br)) {
-                if (!bb_putc(out, ' ')) { PyMem_Free(stack); return 0; }
+                if (!bb_putc(out, ' ')) return 0;
                 last_space = 1;
             }
         }
         for (int k = nd->kids.len - 1; k >= 0; k--)
             stack[top++] = nd->kids.d[k];
     }
-    PyMem_Free(stack);
     /* final strip of ASCII ws (not nbsp) on the span we appended */
     size_t a = start_len, b = out->len;
     while (a < b) {
@@ -6309,7 +6539,7 @@ static int an_node_text(AB *ab, int root, BBuf *out) {
 /* first node (DFS) matching: tag, or id attr value; -1 = none */
 static int an_find_first(AB *ab, int want_tag, const uint8_t *idv,
                          int idlen) {
-    int *stack = (int *)PyMem_Malloc((size_t)(ab->nn + 1) * sizeof(int));
+    int *stack = an_walk(ab);
     if (!stack) return -1;
     int top = 0;
     stack[top++] = 0;
@@ -6340,7 +6570,6 @@ static int an_find_first(AB *ab, int want_tag, const uint8_t *idv,
         for (int k = nd->kids.len - 1; k >= 0; k--)
             stack[top++] = nd->kids.d[k];
     }
-    PyMem_Free(stack);
     return found;
 }
 
@@ -6454,7 +6683,7 @@ static PyObject *py_main_content_text(PyObject *self, PyObject *args) {
     }
 
     int nn = ab.nn;
-    int *stack = (int *)PyMem_Malloc((size_t)(nn + 1) * sizeof(int));
+    int *stack = an_walk(&ab);
     int *cand_of = (int *)PyMem_Malloc((size_t)nn * sizeof(int));
     IVec cands = {0}, anchors = {0};
     Py_ssize_t *link = NULL;
@@ -6518,7 +6747,7 @@ static PyObject *py_main_content_text(PyObject *self, PyObject *args) {
             r = PyUnicode_DecodeUTF8((const char *)buf.d,
                                      (Py_ssize_t)buf.len, "strict");
     }
-    PyMem_Free(stack); PyMem_Free(cand_of); PyMem_Free(link);
+    PyMem_Free(cand_of); PyMem_Free(link);
     PyMem_Free(buf.d);
     iv_free(&cands); iv_free(&anchors);
     ab_free(&ab);
@@ -6817,33 +7046,6 @@ static uint64_t xxh64(const uint8_t *p, size_t len, uint64_t seed) {
     return h;
 }
 
-/* one Arrow utf8 column's raw buffers, as batch_extract takes them; an
- * empty validity buffer means no nulls */
-typedef struct {
-    Py_buffer data, offs, valid;
-    Py_ssize_t arr_offset;
-    int large;
-} ArrowStr;
-
-static int as_row(const ArrowStr *c, Py_ssize_t i, const uint8_t **s,
-                  size_t *len) {
-    Py_ssize_t j = c->arr_offset + i;
-    if (c->valid.len &&
-        !(((const uint8_t *)c->valid.buf)[j >> 3] & (1 << (j & 7))))
-        return 0;
-    Py_ssize_t s0, s1;
-    if (c->large) {
-        s0 = ((const int64_t *)c->offs.buf)[j];
-        s1 = ((const int64_t *)c->offs.buf)[j + 1];
-    } else {
-        s0 = ((const int32_t *)c->offs.buf)[j];
-        s1 = ((const int32_t *)c->offs.buf)[j + 1];
-    }
-    *s = (const uint8_t *)c->data.buf + s0;
-    *len = (size_t)(s1 - s0);
-    return 1;
-}
-
 /* batch_xxhash64_concat_ws(a_data, a_offs, a_valid, a_offset, a_large,
  *                          b_data, b_offs, b_valid, b_offset, b_large,
  *                          n: int, seed: int) -> bytes
@@ -6909,8 +7111,11 @@ static PyMethodDef methods[] = {
      "init tag/entity tables (once per process)"},
     {"doc_text", py_doc_text, METH_VARARGS,
      "doc_text(html) -> (text, title|None) or None on bail-out"},
+    {"utf8_gate", py_utf8_gate, METH_VARARGS,
+     "per-row UTF-8 gate over raw Arrow binary buffers"},
     {"batch_extract", py_batch_extract, METH_VARARGS,
-     "batch over raw Arrow utf8 buffers; returns arrow-ready buffers"},
+     "batch over raw Arrow string/binary buffers; returns arrow-ready\n"
+     "buffers"},
     {"batch_md5_prefix64", py_batch_md5_prefix64, METH_VARARGS,
      "per-string uint64 md5 prefix over raw Arrow utf8 buffers"},
     {"batch_xxhash64_concat_ws", py_batch_xxhash64_concat_ws, METH_VARARGS,

@@ -23,6 +23,12 @@
    (candidates, anchor link lengths, first max wins, ``<body>``/root
    fallback); only the winner's text is encoded as a ``str``. Bails
    where the arena builder does (tests/test_maincontent.py).
+4. **UTF-8 gate** — ``utf8_gate(binary_array) -> Utf8Gate``: per doc of
+   a binary batch, whether ``api.decode_html`` would read it as plain
+   UTF-8 (BOM and ``<meta charset>`` sniffed as it sniffs them, bytes
+   validated). Tier 1 and the arena tier read the accepted docs straight
+   from their bytes; only refused docs are decoded in Python
+   (tests/test_utf8_gate.py).
 
 The C source is compiled once per machine with the system gcc into the
 package directory (or ``~/.cache`` if read-only); compilation results
@@ -419,19 +425,30 @@ def batch_md5_prefix64(col):
     return np.frombuffer(raw, dtype=np.uint64)
 
 
-def _str_buffers(col):
-    """(data, offsets, validity, offset, large) of a ``pyarrow`` string
-    or large_string array, validity ``b""`` when it has no nulls; None
-    for any other type."""
+def _arrow_buffers(col):
+    """(data, offsets, validity, offset, large) of a ``pyarrow`` string,
+    large_string, binary or large_binary array, validity ``b""`` when it
+    has no nulls; None for any other type."""
     import pyarrow as pa
 
-    if col.type not in (pa.string(), pa.large_string()):
+    if col.type not in (pa.string(), pa.large_string(), pa.binary(),
+                        pa.large_binary()):
         return None
     valid, offs, data = col.buffers()
     return (data if data is not None else b"",
             offs if offs is not None else b"",
             valid if valid is not None and col.null_count else b"",
-            col.offset, col.type == pa.large_string())
+            col.offset, col.type in (pa.large_string(), pa.large_binary()))
+
+
+def _str_buffers(col):
+    """:func:`_arrow_buffers` of a string or large_string array; None for
+    any other type."""
+    import pyarrow as pa
+
+    if not (pa.types.is_string(col.type) or pa.types.is_large_string(col.type)):
+        return None
+    return _arrow_buffers(col)
 
 
 def batch_xxhash64_concat_ws(a, b):
@@ -453,47 +470,129 @@ def batch_xxhash64_concat_ws(a, b):
     return np.frombuffer(raw, dtype=np.int64)
 
 
-def batch_doc_text(col, scope_id: str | None = None):
-    """Batch fast path over a ``pyarrow`` string array.
+REFUSED = 255       # a utf8_gate outcome: the doc needs api.decode_html
+
+def _utf8_labels() -> tuple[bytes, ...]:
+    """Every lower-case charset label ``codecs.lookup`` maps to the
+    ``utf-8`` codec: the codec name ``utf_8`` and its keys in
+    ``encodings.aliases``, each spelled with ``_`` and with ``-``. Only
+    the ``utf_8`` module is looked up, so no other codec module is
+    imported (tests/test_utf8_gate.py checks the table against a lookup
+    of every alias)."""
+    import codecs
+    from encodings.aliases import aliases
+
+    names = {"utf_8"} | {k for k, v in aliases.items() if v == "utf_8"}
+    return tuple(sorted(
+        label.encode() for name in names
+        for label in {name, name.replace("_", "-")}
+        if codecs.lookup(label).name == "utf-8"))
+
+
+# the only <meta charset> labels the UTF-8 gate accepts: api.decode_html
+# reads a doc that carries one of them as UTF-8
+UTF8_LABELS = _utf8_labels()
+
+
+def _positions(buf: bytes, value: int) -> list[int]:
+    """The indexes of the bytes of ``buf`` that equal ``value``."""
+    out, i = [], buf.find(value)
+    while i >= 0:
+        out.append(i)
+        i = buf.find(value, i + 1)
+    return out
+
+
+class Utf8Gate:
+    """The C gate's verdict on one binary batch (:func:`utf8_gate`).
+
+    ``skip[i]`` is where row ``i``'s UTF-8 text starts in its bytes (0, or
+    3 after a UTF-8 BOM), or :data:`REFUSED`; ``decoded`` maps each
+    refused row to its ``api.decode_html`` text, in row order."""
+
+    __slots__ = ("skip", "decoded")
+
+    def __init__(self, skip: bytes, decoded: dict):
+        self.skip = skip
+        self.decoded = decoded
+
+    def doc(self, col, i: int):
+        """Row ``i``'s document for the C tiers: its UTF-8 bytes, the
+        decoded ``str`` of a refused row, or "" for a null."""
+        s = self.decoded.get(i)
+        if s is None:
+            s = col[i].as_py()
+            if s is None:
+                return ""
+            k = self.skip[i]
+            if k:
+                s = s[k:]
+        return s
+
+
+def utf8_gate(col) -> Utf8Gate | None:
+    """Which docs of a ``pyarrow`` binary or large_binary array the C
+    tiers can read straight from their bytes: those where
+    ``api.decode_html(doc)`` is the doc's bytes read as UTF-8 (after a
+    UTF-8 BOM, if any). One C call sniffs each doc as ``decode_html``
+    does (BOM, then the ``<meta charset>`` label of the first 1,024
+    bytes, which must be one of :data:`UTF8_LABELS`) and checks that the
+    bytes are valid UTF-8 with no NUL. Only the refused docs are decoded,
+    with ``api.decode_html`` looked up on its module per call. None for
+    any other type, or without the native module."""
+    m = get_module()
+    if m is None or not hasattr(m, "utf8_gate"):
+        return None
+    import pyarrow as pa
+
+    if not (pa.types.is_binary(col.type) or pa.types.is_large_binary(col.type)):
+        return None
+    from swiftsoup_spark import api
+
+    skip = m.utf8_gate(*_arrow_buffers(col), len(col), UTF8_LABELS)
+    return Utf8Gate(skip, {i: api.decode_html(col[i].as_py())
+                           for i in _positions(skip, REFUSED)})
+
+
+def batch_doc_text(col, scope_id: str | None = None,
+                   gate: Utf8Gate | None = None):
+    """Tier 1, the C streaming extractor, over a whole ``pyarrow`` string,
+    large_string, binary or large_binary array in one call; a null reads
+    as "".
+
+    A binary doc that ``gate`` (:func:`utf8_gate` of ``col``, computed
+    here when not given) accepts is parsed straight from the Arrow
+    buffers; a refused one from its ``api.decode_html`` text, which the
+    gate holds. So tier 1 sees every doc as the string path would.
 
     Returns ``(text_array, title_array, bail_indices)`` where the arrays
     are Arrow string arrays built directly from C-produced buffers (no
     per-row Python objects), or ``None`` if the native module is
-    unavailable / the batch shape is unsupported (non-string type,
-    nulls) — callers then take the per-document tiers. Rows listed in
-    ``bail_indices`` hold empty strings and must be recomputed by a
-    later tier.
+    unavailable or the column has another type or is too large — callers
+    then take the per-document tiers. Rows listed in ``bail_indices``
+    hold empty strings and must be recomputed by a later tier.
     """
     import pyarrow as pa
 
     m = get_module()
-    if m is None:
+    bufs = _arrow_buffers(col)
+    if m is None or bufs is None:
         return None
-    typ = col.type
-    if typ == pa.string():
-        large = False
-    elif typ == pa.large_string():
-        large = True
-    else:
-        return None
-    if col.null_count:
-        return None
-    bufs = col.buffers()          # [validity, offsets, data]
-    if len(bufs) != 3 or bufs[1] is None:
-        return None
-    data = bufs[2] if bufs[2] is not None else b""
+    skip = decoded = None
+    if pa.types.is_binary(col.type) or pa.types.is_large_binary(col.type):
+        if gate is None:
+            gate = utf8_gate(col)
+            if gate is None:
+                return None
+        skip, decoded = gate.skip, list(gate.decoded.values())
+    n = len(col)
     try:
         tdat, toff, ddat, doff, mask, n_bails = m.batch_extract(
-            data, bufs[1], len(col), col.offset, large, scope_id)
+            *bufs, n, scope_id, skip, decoded)
     except OverflowError:
         return None
-    n = len(col)
     text_arr = pa.Array.from_buffers(
         pa.string(), n, [None, pa.py_buffer(toff), pa.py_buffer(tdat)])
     title_arr = pa.Array.from_buffers(
         pa.string(), n, [None, pa.py_buffer(doff), pa.py_buffer(ddat)])
-    if n_bails:
-        bail_idx = [i for i, b in enumerate(mask) if b]
-    else:
-        bail_idx = []
-    return text_arr, title_arr, bail_idx
+    return text_arr, title_arr, _positions(mask, 1) if n_bails else []

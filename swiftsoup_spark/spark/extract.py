@@ -166,36 +166,42 @@ def _extract_column(html, css_scope: str | None = None,
                     metrics: bool = False) -> list:
     """The one tier policy of the text operators: an Arrow ``html``
     column -> ``[text, title]`` Arrow arrays, plus ``[n_nodes,
-    parse_errors]`` when ``metrics`` is set.
+    parse_errors]`` when ``metrics`` is set. A null reads as "".
 
-    Binary html is charset-decoded (``api.decode_html``) and null read
-    as "" once, into a string array. With no scope or a simple ``#id``
-    scope, tier 1 is the C streaming extractor over the whole batch's
-    Arrow buffers (``fastpath.batch_doc_text``). A document it refuses
-    goes to tier 2, the C arena (``fastpath.arena_doc_text``); every
-    document does when ``metrics`` is set, since tier 1 counts no
-    nodes. Only a tier-2 bail reaches the Python tree builder. Any
-    other scope builds the DOM with :func:`fast_parse` and runs the
-    selector. Every tier gives byte-identical output
-    (tests/test_fastpath.py, tests/test_arena_build.py). Layer
-    functions are looked up through their modules on each call, so
-    wrappers patched onto those modules see every call.
+    With no scope or a simple ``#id`` scope, the C tiers read binary
+    html in place: ``fastpath.utf8_gate`` picks out the docs that
+    ``api.decode_html`` would read as plain UTF-8, and only the docs it
+    refuses (other charsets, UTF-16, invalid UTF-8, NUL bytes) are
+    decoded before the C tiers; a doc both C tiers bail on is decoded
+    for the Python tree builder. Tier 1 is the C streaming extractor over
+    the whole batch's Arrow buffers (``fastpath.batch_doc_text``). A
+    document it refuses goes to tier 2, the C arena
+    (``fastpath.arena_doc_text``); every document does when ``metrics``
+    is set, since tier 1 counts no nodes. Only a tier-2 bail reaches the
+    Python tree builder. Any other scope decodes every binary doc, builds
+    the DOM with :func:`fast_parse` and runs the selector. Every tier
+    gives byte-identical output (tests/test_fastpath.py,
+    tests/test_arena_build.py, tests/test_utf8_gate.py). Layer functions
+    are looked up through their modules on each call, so wrappers
+    patched onto those modules see every call.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
+    from swiftsoup_spark import api
     from swiftsoup_spark.kernel import fastpath
     from swiftsoup_spark.kernel.arena import Document
     from swiftsoup_spark.kernel.treebuilder import HtmlTreeBuilder
     from swiftsoup_spark.select import engine
 
-    if html.null_count or not (pa.types.is_string(html.type)
-                               or pa.types.is_large_string(html.type)):
-        html = pa.array([_to_str(v) for v in html.to_pylist()], pa.string())
     scope_id = fastpath.scope_to_id(css_scope)
     c_scope = not css_scope or scope_id is not None
+    gate = fastpath.utf8_gate(html) if c_scope else None
+    if gate is None and not (pa.types.is_string(html.type)
+                             or pa.types.is_large_string(html.type)):
+        html = pa.array([_to_str(v) for v in html.to_pylist()], pa.string())
     todo, tier1 = range(len(html)), None
     if c_scope and not metrics:
-        br = fastpath.batch_doc_text(html, scope_id)
+        br = fastpath.batch_doc_text(html, scope_id, gate)
         if br is not None:
             tier1, todo = br[:2], br[2]
             if not todo:
@@ -203,9 +209,11 @@ def _extract_column(html, css_scope: str | None = None,
     cols = [], [], [], []
     tb = HtmlTreeBuilder(track_spans=False)
     for i in todo:
-        s = html[i].as_py()
+        s = gate.doc(html, i) if gate is not None else html[i].as_py() or ""
         r = fastpath.arena_doc_text(s, scope_id) if c_scope else None
         if r is None:
+            if isinstance(s, bytes):    # the gate's UTF-8 bytes
+                s = api.decode_html(html[i].as_py())
             arena = tb.parse(s) if c_scope else fast_parse(tb, s)
             if css_scope:
                 m = engine.select(arena, 0, css_scope)

@@ -89,7 +89,17 @@ class ParquetFormat:
 class IcebergFormat:
     """Catalog-table commit via the DataFrameWriterV2 API: partition
     replacement is an atomic snapshot operation (``overwritePartitions``).
-    ``target`` is a table identifier (``catalog.db.table``)."""
+    ``target`` is a table identifier (``catalog.db.table``).
+
+    Risk, unverified (no Iceberg runtime here): the manifest stats are
+    exact only while the kernel stage runs in the write's result stage,
+    whose accumulator updates Spark applies once per partition. A table
+    that shuffles before the write (a ``hash`` or ``range``
+    write-distribution mode, which Iceberg can apply to partitioned
+    tables) would move the kernel into a map stage, where a retried or
+    speculative stage can count its rows twice.
+    ``tests/test_pipeline.py`` pins the parquet plan (no Exchange above
+    the kernel); a session with Iceberg needs the same check."""
 
     def overwrite_partitions(self, df, target: str, partition_col: str) -> None:
         # explicit existence check — a blind try/except around
@@ -296,7 +306,8 @@ def run_extraction(spark, pages_df, out_dir: str, n_buckets: int = 32,
     """
     fmt = table_format or table_format_for(out_dir)
     done = done_buckets(spark, out_dir)
-    if done >= set(range(n_buckets)):
+    todo_buckets = set(range(n_buckets)) - done
+    if not todo_buckets:
         return _manifest_df(spark, out_dir)
     bucketed = pages_df.withColumn(
         "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"))
@@ -310,12 +321,14 @@ def run_extraction(spark, pages_df, out_dir: str, n_buckets: int = 32,
     stats = spark.sparkContext.accumulator({}, BucketStats())
     fmt.overwrite_partitions(_extract_stage(todo, css_scope, stats),
                              fmt.extracted_target(out_dir), "bucket")
-    # lineage manifest: one row per bucket this run wrote, committed from
+    # lineage manifest: one row per bucket of this run, committed from
     # the driver as this run's own manifest file: until that rename
     # lands, these buckets are not done, so a crash here redoes exactly
-    # them on the next run
-    _commit_manifest(out_dir, [(b, n, chars, cks, "done") for b, (n, chars, cks)
-                               in sorted(stats.value.items())])
+    # them on the next run. A bucket no url hashes into wrote no rows; its
+    # (0, 0, 0) row marks it done all the same, so no re-run scans for it
+    seen = stats.value
+    _commit_manifest(out_dir, [(b, *seen.get(b, (0, 0, 0)), "done")
+                               for b in sorted(todo_buckets)])
     return _manifest_df(spark, out_dir)
 
 

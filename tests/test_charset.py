@@ -59,3 +59,53 @@ def test_punycode_label_falls_back_to_utf8():
     for body in ("<p>café</p>", "<p>ascii</p>"):
         data = ('<meta charset="punycode">' + body).encode("utf-8")
         assert decode_html(data) == data.decode("utf-8")
+
+
+# --- the sniff's edges, as decode_html reads them today (the UTF-8 gate
+# in kernel/_fastpath.c must reproduce each one) ---
+
+def test_meta_label_cut_by_the_head():
+    # only the first 1,024 bytes are sniffed: "iso-8859-15" cut after
+    # its "1" reads as iso-8859-1 (0xa4 is "¤" there, "€" in -15)
+    tag = b'<meta charset="iso-8859-15">'
+    pad = b" " * (1024 - tag.index(b"15") - 1)
+    data = pad + tag + b"<p>\xa4</p>"
+    assert data[:1024].endswith(b"iso-8859-1")
+    assert decode_html(data) == data.decode("iso-8859-1")
+    assert "¤" in decode_html(data)
+    assert decode_html(data[len(pad):]) == data[len(pad):].decode("iso-8859-15")
+
+
+def test_gt_between_meta_and_charset():
+    # the tag ends before "charset": no label, UTF-8
+    data = '<meta name="x"> charset=iso-8859-1 <p>café</p>'.encode("utf-8")
+    assert decode_html(data) == data.decode("utf-8")
+
+
+def test_charset_in_a_non_meta_tag():
+    data = '<p charset="iso-8859-1">café</p>'.encode("utf-8")
+    assert decode_html(data) == data.decode("utf-8")
+
+
+def test_second_meta_carries_the_label():
+    data = ('<meta name="viewport" content="w"><meta charset="iso-8859-1">'
+            '<p>café</p>').encode("latin-1")
+    assert decode_html(data) == data.decode("latin-1")
+
+
+def test_upper_case_charset():
+    data = '<META CHARSET="ISO-8859-1"><p>café</p>'.encode("latin-1")
+    assert decode_html(data) == data.decode("latin-1")
+
+
+def test_utf8_bom_wins_over_meta_label():
+    body = '<meta charset="iso-8859-1"><p>café</p>'.encode("utf-8")
+    assert decode_html(b"\xef\xbb\xbf" + body) == body.decode("utf-8")
+
+
+def test_utf16_label_without_bom():
+    # pinned as it is: a closed WHATWG label table would read this page
+    # as UTF-8 instead
+    data = b'<meta charset="utf-16"><p>x</p>'
+    assert decode_html(data) == data.decode("utf-16", "replace")
+    assert decode_html(data) != data.decode("utf-8")

@@ -103,3 +103,59 @@ def test_bad_charset_pages_do_not_fail_job(spark):
     assert len(got) == len(html)
     assert got[f"u{len(good)}"] == got[f"u{len(good) + 1}"] == "t café ok"
     assert got["u0"] == "good 0"
+
+
+def _captured_kernel(pages, monkeypatch, **kwargs):
+    """``extract_pages``' own ``mapInArrow`` function, captured without
+    running a job."""
+    from swiftsoup_spark.spark.extract import extract_pages
+    got = []
+    cls = type(pages)
+    orig = cls.mapInArrow
+
+    def spy(self, func, schema, *args, **kw):
+        got.append(func)
+        return orig(self, func, schema, *args, **kw)
+
+    monkeypatch.setattr(cls, "mapInArrow", spy)
+    extract_pages(pages, **kwargs)
+    monkeypatch.setattr(cls, "mapInArrow", orig)
+    return got[-1]
+
+
+def test_hot_path_decodes_only_what_the_gate_refuses(spark, monkeypatch):
+    """The operator's kernel, replayed in-process over one binary batch,
+    calls ``api.decode_html`` for no UTF-8 page (plain, BOM, ``<meta
+    charset="utf-8">``) and once for a latin-1 or a UTF-16-BOM page.
+    Every row equals the row of the decoded string column."""
+    import pyarrow as pa
+    from swiftsoup_spark import api
+    from swiftsoup_spark.spark.extract import _extract_column
+
+    if fastpath.get_module() is None:
+        pytest.skip("native kernel unavailable")
+    utf8 = [PLAIN, b"\xef\xbb\xbf" + PLAIN,
+            b'<meta charset="utf-8">' + PLAIN.replace(b"lead", "léad".encode())]
+    utf16 = "<title>T</title><div id=main>wide</div>".encode("utf-16")
+    pages = spark.createDataFrame([("u", b"")], "url string, html binary")
+    for metrics in (False, True):
+        kernel = _captured_kernel(pages, monkeypatch, css_scope="#main",
+                                  metrics=metrics)
+        for docs, n_decodes in ((utf8, 0), (utf8 + [LATIN1], 1),
+                                (utf8 + [utf16], 1)):
+            want = _extract_column(pa.array([decode_html(d) for d in docs]),
+                                   "#main", metrics)
+            calls = []
+            monkeypatch.setattr(api, "decode_html",
+                                lambda d, f=api.decode_html: calls.append(d)
+                                or f(d))
+            batch = pa.RecordBatch.from_arrays(
+                [pa.array([f"u{i}" for i in range(len(docs))]),
+                 pa.array(docs, pa.binary())], ["url", "html"])
+            (out,) = kernel(iter([batch]))
+            monkeypatch.undo()
+            assert len(calls) == n_decodes, (metrics, docs[-1][:20])
+            names = ["text", "title"] + (["n_nodes", "parse_errors"]
+                                         if metrics else [])
+            assert [out.column(nm).to_pylist() for nm in names] == \
+                [a.to_pylist() for a in want]

@@ -410,6 +410,57 @@ def test_salt_gives_same_rows_manifest_and_checksum(spark, finished, tmp_path):
     assert extracted(out) == extracted(base)
 
 
+def test_empty_buckets_are_done(spark, finished, tmp_path):
+    """With more buckets than a 500-page input fills, every bucket gets a
+    manifest row: a bucket no url hashes into gets (b, 0, 0, 0, 'done')
+    and has no data files, and a re-run starts no Spark job. The readback
+    oracle has no row for an empty bucket, so it is compared with the
+    non-empty rows."""
+    from swiftsoup_spark.spark import pipeline as P
+
+    pages, _, _, cks_full = finished
+    out = str(tmp_path / "sparse")
+    P.run_extraction(spark, pages, out, n_buckets=1024)
+    rows = _manifest_rows(os.path.join(out, P.MANIFEST))
+    assert [r[0] for r in rows] == list(range(1024))
+    full = [r for r in rows if r[1]]
+    zero = [r for r in rows if not r[1]]
+    assert full == _readback(spark, out)
+    assert zero and all(r[1:] == (0, 0, 0, "done") for r in zero)
+    assert not {r[0] for r in zero} & set(_bucket_files(out))
+    assert P.corpus_checksum(spark, out) == cks_full
+    jobs = _jobs_of(spark, "sparse-rerun", lambda: P.run_extraction(
+        spark, pages, out, n_buckets=1024))
+    assert jobs == []
+
+
+@pytest.mark.parametrize("salt", [1, 3])
+def test_no_exchange_above_the_kernel(spark, finished, tmp_path, salt):
+    """``BucketStats`` counts each row once only while the kernel stage
+    runs in the write's result stage: the planned write has no Exchange
+    above the ``MapInArrow``; with ``salt=3`` its bucket shuffle is below
+    it (``pages_df``'s own repartition is below it either way)."""
+    from swiftsoup_spark.spark import pipeline as P
+
+    plans = []
+
+    class Spy(P.ParquetFormat):
+        def overwrite_partitions(self, df, target, partition_col):
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+            super().overwrite_partitions(df, target, partition_col)
+
+    P.run_extraction(spark, finished[0], str(tmp_path / "out"), n_buckets=8,
+                     salt=salt, table_format=Spy())
+    (plan,) = plans
+    lines = plan.splitlines()
+    kernel = [i for i, ln in enumerate(lines) if "MapInArrow" in ln]
+    exchanges = [i for i, ln in enumerate(lines) if "Exchange" in ln]
+    assert len(kernel) == 1, plan
+    assert all(i > kernel[0] for i in exchanges), plan
+    assert any("hashpartitioning(bucket" in lines[i] for i in exchanges) \
+        == (salt > 1), plan
+
+
 def test_run_leaves_session_overwrite_mode_alone(spark, finished, tmp_path):
     """The bucket write asks for dynamic partition overwrite per write:
     the session's ``partitionOverwriteMode`` stays as the caller set it,
