@@ -26,7 +26,6 @@ from swiftsoup_spark.spark.pages import (
 )
 from swiftsoup_spark.spark import extract as X
 from swiftsoup_spark.ops import dedup as D, textstats as TX
-from swiftsoup_spark.ops.hll import hll_oracle_sql
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -187,58 +186,6 @@ def q_sample_temperature(spark, sf_dir):
                  F.sum(F.length("text")).alias("sum_chars")))
 
 
-def q_crawl_frontier(spark, sf_dir):
-    """Politeness-cycle fetch scheduling (ops/crawl.crawl_frontier):
-    ≤3 urls per host per cycle, shallow-first, host pinned to a stable
-    fetcher slot. Per-host top-K is the salted two-phase min-K (no
-    per-host window over the corpus); the oracle is the naive
-    row_number window."""
-    from swiftsoup_spark.ops.crawl import crawl_frontier
-    return crawl_frontier(pages_df(spark, sf_dir))
-
-
-# snapshot-1 html: every doc_id % 3 == 0 page gains one paragraph —
-# the deterministic "site updated between crawls" corpus, shared
-# verbatim with the DuckDB oracle
-_NP_SNAP1_SQL = "(1 + doc_id % 4 + CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END)"
-DELTA_SNAPS_SQL = (
-    f"SELECT {URL_SQL} AS url, 0 AS snap, {HTML_SQL} AS html FROM documents "
-    "UNION ALL "
-    f"SELECT {URL_SQL} AS url, 1 AS snap, "
-    f"{HTML_SQL.replace(NP_SQL, _NP_SNAP1_SQL)} AS html FROM documents")
-
-
-def q_crawl_delta(spark, sf_dir):
-    """CDX-style revisit detection (ops/crawl.crawl_delta): per url,
-    did the content digest change between two crawl snapshots? Bodies
-    are md5-hashed map-side; only (url, snap, digest) rides the
-    groupBy shuffle."""
-    from swiftsoup_spark.ops.crawl import crawl_delta
-    load_documents(spark, sf_dir)
-    return crawl_delta(spark.sql(DELTA_SNAPS_SQL))
-
-
-def q_doclen_quantiles(spark, sf_dir):
-    """Scale-exact per-language length quantiles
-    (ops/corpusstats.int_quantiles): quantile_cont semantics computed
-    from the per-group distinct-value histogram — the window runs over
-    ≤|value domain| rows per group, never |corpus| rows, so the classic
-    exact-percentile reducer OOM cannot happen. Oracle: DuckDB's native
-    quantile_cont."""
-    from swiftsoup_spark.ops.corpusstats import int_quantiles
-    return int_quantiles(_docs(spark, sf_dir), "lang", "n_chars")
-
-
-def q_tfidf_topk(spark, sf_dir):
-    """Per-document top-3 tf-idf keywords (ops/corpusstats.tfidf_topk):
-    two linear groupBys + one term-keyed equi join; per-doc top-k
-    sorted in-array (bounded by the document's distinct terms). Ties
-    break on (−score, term); scores rounded 6dp so ln replays across
-    engines."""
-    from swiftsoup_spark.ops.corpusstats import tfidf_topk
-    return tfidf_topk(_docs(spark, sf_dir))
-
-
 # links variant: 2 cross-host absolute anchors + 1 relative (resolves
 # against the page url) per doc — shared verbatim with the oracle
 LINKS_HTML_SQL = (
@@ -254,8 +201,7 @@ LINKS_HTML_SQL = (
 def q_outlink_hosts(spark, sf_dir):
     """Kernel-extracted host-graph edges
     (ops/linkgraph.outlink_host_edges): parse → a[href] → absUrl →
-    (src_host, dst_host, n_links, top-3 anchors). The acquisition-side
-    edge extraction that feeds pagerank_hosts, with anchor state
+    (src_host, dst_host, n_links, top-3 anchors), with anchor state
     bounded by the salted two-phase min-K."""
     from swiftsoup_spark.ops.linkgraph import outlink_host_edges
     load_documents(spark, sf_dir)
@@ -288,25 +234,6 @@ def q_nfc_normalize(spark, sf_dir):
     d = spark.sql(
         f"SELECT doc_id, {NFC_INPUT_SPARK} AS text FROM documents")
     return nfc_normalize(d)
-
-
-def q_bloom_seen(spark, sf_dir):
-    """Broadcastable Bloom-filter membership (ops/membership.py):
-    the "already fetched?" check — build bits with bit_or aggregates
-    from the seen set (urls of doc_id%7==0), probe every url via a
-    broadcast join. Positions from md5 hex digits, so the DuckDB
-    oracle replays the filter bit-for-bit, false positives included."""
-    from swiftsoup_spark.ops.membership import bloom_build, bloom_probe
-    pages = pages_df(spark, sf_dir)
-    seen = pages.filter(F.col("doc_id") % 7 == 0).select("url")
-    bloom = bloom_build(seen, "url")
-    probed = bloom_probe(pages.select("url", "doc_id"), "url", bloom)
-    truth = pages.select(
-        "url", (F.col("doc_id") % 7 == 0).alias("seen"))
-    return (probed.join(truth, "url")
-            .select("url", "bloom_positive", "seen",
-                    (F.col("bloom_positive") & ~F.col("seen"))
-                    .alias("false_positive")))
 
 
 def q_incremental_dedup(spark, sf_dir):
@@ -995,35 +922,6 @@ def q_line_dedup(spark, sf_dir):
                                       max_docs=5)
 
 
-def q_pagerank_hosts(spark, sf_dir):
-    """Fixed-point weighted PageRank over a planted host link graph
-    (ops/linkgraph.py): doc d on host source(d) links to the host of
-    doc (17*d + 3) mod 97, PLUS every 13th doc links to a pure sink
-    host with no outlinks — exercising the dangling-mass
-    redistribution (uniform share of the damped dangling rank, exact
-    integer split). 5 iterations of BIGINT-e12 ranks; the per-edge
-    float step is the same correctly-rounded IEEE expression in both
-    engines and all summation is over exact integers, so ranks are
-    bit-identical across partitionings and vs the unrolled-CTE DuckDB
-    oracle."""
-    from swiftsoup_spark.ops.linkgraph import pagerank_fixedpoint
-    d = _docs(spark, sf_dir)
-    host = F.concat(F.col("source"), F.lit(".docs.test"))
-    src = d.select(host.alias("src_host"),
-                   ((F.col("doc_id") * 17 + 3) % 97).alias("k"))
-    dst = (d.filter(F.col("doc_id") < 97)
-           .select(F.col("doc_id").alias("k"), host.alias("dst_host")))
-    sink = (d.filter(F.col("doc_id") % 13 == 0)
-            .groupBy(host.alias("src_host"))
-            .agg(F.count("*").alias("w"))
-            .select("src_host", F.lit("sink.docs.test").alias("dst_host"),
-                    "w"))
-    edges = (src.join(F.broadcast(dst), "k")
-             .groupBy("src_host", "dst_host").agg(F.count("*").alias("w"))
-             .unionByName(sink))
-    return pagerank_fixedpoint(edges, iters=5)
-
-
 def q_bpe_token_count(spark, sf_dir):
     """BPE-style pre-tokenizer counts (ops/textstats.bpe_token_count):
     token-budget accounting with tokenizer-shaped segmentation instead
@@ -1331,15 +1229,6 @@ def q_decontam(spark, sf_dir):
     return contamination(docs, _decontam_bench(docs), n=8)
 
 
-def q_cms_sketch(spark, sf_dir):
-    """Count-min sketch counter table over corpus tokens (ops/cms.py):
-    4x256 md5-bucketed counters, one partial-aggregable groupBy of
-    ints, bit-exact vs the DuckDB replay. The heavy-hitters companion
-    to hll_sketch; merge = counter addition."""
-    from swiftsoup_spark.ops.cms import cms_sketch
-    return cms_sketch(_docs(spark, sf_dir))
-
-
 def q_page_directives(spark, sf_dir):
     """Crawl-governance head metadata (ops/pagemeta.page_directives):
     canonical link resolved via absUrl (relative on 2/3 of docs),
@@ -1382,15 +1271,6 @@ def q_jsonl_export(spark, sf_dir):
     partitioned write."""
     from swiftsoup_spark.ops.jsonl import jsonl_export
     return jsonl_export(_docs(spark, sf_dir))
-
-
-def q_hll_sketch(spark, sf_dir):
-    """Per-lang HyperLogLog distinct-text sketch (ops/hll.py):
-    md5-register construction in one partial-aggregable groupBy —
-    the mergeable sketch form, integer-only across the gate; the
-    DuckDB oracle replays every register bit-for-bit."""
-    from swiftsoup_spark.ops.hll import hll_sketch
-    return hll_sketch(_docs(spark, sf_dir), "lang", "text")
 
 
 def q_flesch(spark, sf_dir):
@@ -1655,17 +1535,6 @@ def q_host_boilerplate(spark, sf_dir):
     return remove_host_boilerplate(df)
 
 
-def q_bm25(spark, sf_dir):
-    """Integer-exact BM25 top-5 retrieval (ops/search.bm25_topk):
-    bit-length idf + one exact integer division for the tf-saturation
-    term — no libm ln anywhere, scores replay bit-for-bit in DuckDB.
-    df is pruned to query terms before any corpus join (broadcast
-    probe); per-query top-k is salted two-phase (no corpus-wide
-    window)."""
-    from swiftsoup_spark.ops.search import bm25_topk, queries_df
-    return bm25_topk(_docs(spark, sf_dir), queries_df(spark), k=5)
-
-
 def q_dedup_norm(spark, sf_dir):
     """Normalized-key exact dedup (ops/dedup.norm_exact_dedup): the
     CCNet/BigScience aggressive normalization (lowercase, non-letters →
@@ -1681,34 +1550,6 @@ def q_dedup_norm(spark, sf_dir):
         " AS s")
         .select(F.col("s.id").alias("id"), F.col("s.t").alias("text")))
     return norm_exact_dedup(df, "text", "id")
-
-
-def q_bm25_snippets(spark, sf_dir):
-    """Search-result rendering (ops/search.bm25_snippets): keyword-in-
-    context snippets for the BM25 top-k — the tiny hit list broadcasts
-    BACK onto the corpus (map-only; text never shuffles, non-hit docs
-    never materialize), snippet window via locate/substring in pure
-    JVM codegen."""
-    from swiftsoup_spark.ops.search import bm25_snippets, queries_df
-    return bm25_snippets(_docs(spark, sf_dir), queries_df(spark), k=5)
-
-
-def q_asof_snapshot(spark, sf_dir):
-    """As-of join (ops/asof.as_of_join): most-recent capture at-or-
-    before each probe timestamp — the temporal lookup Spark has no
-    operator for, done as equi join (bounded per-key fanout) + one
-    partial-aggregable max(struct) argmax. Probe ts sits between
-    captures 1 and 2, so 1-capture urls resolve to c=0, the rest to
-    c=1 (closed-form oracle)."""
-    from pyspark.sql import functions as F
-    from swiftsoup_spark.ops.asof import as_of_join
-    from swiftsoup_spark.ops.snapshots import synth_captures
-    from swiftsoup_spark.spark.pages import TS0, URL_SQL
-    docs = _docs(spark, sf_dir)
-    probes = docs.select(
-        F.expr(URL_SQL).alias("url"),
-        (F.lit(TS0) + F.col("doc_id") * 10 + 1).cast("long").alias("q_ts"))
-    return as_of_join(probes, synth_captures(docs))
 
 
 def q_template_clusters(spark, sf_dir):
@@ -1891,7 +1732,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quality_c4": q_quality_c4,
         "quality_topngram": q_quality_topngram,
         "lm_score": q_lm_score,
-        "pagerank_hosts": q_pagerank_hosts,
         "streaming_dedup": q_streaming_dedup,
         # -- new in r5 ---------------------------------------------------
         "host_regdom": q_host_regdom,
@@ -1908,14 +1748,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "passage_excise": q_passage_excise,
         "pack_chunks": q_pack_chunks,
         "sample_temperature": q_sample_temperature,
-        "crawl_frontier": q_crawl_frontier,
-        "crawl_delta": q_crawl_delta,
-        "doclen_quantiles": q_doclen_quantiles,
-        "tfidf_topk": q_tfidf_topk,
         "outlink_hosts": q_outlink_hosts,
         "wet_export": q_wet_export,
         "nfc_normalize": q_nfc_normalize,
-        "bloom_seen": q_bloom_seen,
         "incremental_dedup": q_incremental_dedup,
         # -- r4-green but touched by the r5 kernel fixes (raw-source
         # dirty tracking, foster-parent spans, xml guard — b401d5e):
@@ -1938,13 +1773,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "select_count": q_select_count,
         "select_all_count": q_select_all_count,
         "select_abs_href": q_select_abs_href,
-        # ---- position 50: the driver gate records exactly this far ----
+        # Entered the window when pagerank_hosts, crawl_frontier,
+        # crawl_delta, doclen_quantiles, tfidf_topk and bloom_seen were
+        # deleted with the operators that extract no text.
         "select_attr": q_select_attr,
         "select_has": q_select_has,
         "select_nth": q_select_nth,
         "select_matches_icu": q_select_matches_icu,
         "clean_basic": q_clean_basic,
         "clean_simpletext": q_clean_simpletext,
+        # ---- position 50: the driver gate records exactly this far ----
         "clean_isvalid": q_clean_isvalid,
         "own_text": q_own_text,
         "form_data": q_form_data,
@@ -1982,13 +1820,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         #    window by construction; pytest-oracle-gated) -------------
         "headings_outline": q_headings_outline,
         "flesch": q_flesch,
-        "hll_sketch": q_hll_sketch,
         "jsonl_export": q_jsonl_export,
         "split_assign": q_split_assign,
         "url_templates": q_url_templates,
         "page_directives": q_page_directives,
         "og_meta": q_og_meta,
-        "cms_sketch": q_cms_sketch,
         "paragraph_dedup": q_paragraph_dedup,
         "perplexity_filter": q_perplexity_filter,
         "bpe_train": q_bpe_train,
@@ -2002,10 +1838,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "template_clusters": q_template_clusters,
         "scrub_text": q_scrub_text,
         "host_boilerplate": q_host_boilerplate,
-        "bm25": q_bm25,
         "dedup_norm": q_dedup_norm,
-        "bm25_snippets": q_bm25_snippets,
-        "asof_snapshot": q_asof_snapshot,
         # -- rotated out of the gate window (older green rows, code
         # unchanged since): r2 host aggs
         "host_url_sample": q_host_url_sample,
@@ -2276,17 +2109,6 @@ SELECT t.doc_id,
                  ELSE 0 END AS BIGINT) AS dup_block_frac_e6
 FROM t LEFT JOIN d ON t.doc_id = d.doc_id
 """
-    from swiftsoup_spark.ops.linkgraph import pagerank_oracle_sql
-    pagerank_hosts = pagerank_oracle_sql("""
-SELECT a.src_host, b.dst_host, count(*) AS w
-FROM (SELECT source || '.docs.test' AS src_host,
-             (doc_id * 17 + 3) % 97 AS k FROM documents) a
-JOIN (SELECT doc_id AS k, source || '.docs.test' AS dst_host
-      FROM documents WHERE doc_id < 97) b USING (k)
-GROUP BY 1, 2
-UNION ALL
-SELECT source || '.docs.test', 'sink.docs.test', count(*)
-FROM documents WHERE doc_id % 13 = 0 GROUP BY 1""", iters=5)
     from swiftsoup_spark.ops.textstats import BPE_TOKEN_RE
     bpe_token_count = f"""
 WITH t AS (SELECT doc_id,
@@ -2712,20 +2534,6 @@ FROM n
 """,
         "sample_quota": sample_quota,
         "sample_temperature": sample_temperature,
-        "crawl_frontier": __import__(
-            "swiftsoup_spark.ops.crawl",
-            fromlist=["crawl_frontier_sql"]).crawl_frontier_sql(
-                f"SELECT {URL_SQL} AS url FROM documents"),
-        "crawl_delta": f"""
-WITH s AS ({DELTA_SNAPS_SQL}),
-d AS (SELECT url, snap, md5(html) AS dg FROM s)
-SELECT url,
-       max(CASE WHEN snap = 0 THEN dg END) AS digest_old,
-       max(CASE WHEN snap = 1 THEN dg END) AS digest_new,
-       max(CASE WHEN snap = 0 THEN dg END)
-         <> max(CASE WHEN snap = 1 THEN dg END) AS changed
-FROM d GROUP BY url
-""",
         "outlink_hosts": """
 WITH p AS (SELECT source || '.docs.test' AS src_host, doc_id
            FROM documents),
@@ -2750,16 +2558,6 @@ FROM e GROUP BY src_host, dst_host
             "swiftsoup_spark.ops.unicode_norm",
             fromlist=["nfc_normalize_sql"]).nfc_normalize_sql(
                 NFC_INPUT_DUCK),
-        "bloom_seen": f"""
-SELECT bp.k AS url, bp.bloom_positive, d.seen,
-       bp.bloom_positive AND NOT d.seen AS false_positive
-FROM ({__import__("swiftsoup_spark.ops.membership",
-                  fromlist=["bloom_sql"]).bloom_sql(
-    f"SELECT {URL_SQL} AS k FROM documents WHERE doc_id % 7 = 0",
-    f"SELECT {URL_SQL} AS k FROM documents")}) bp
-JOIN (SELECT {URL_SQL} AS url, doc_id % 7 = 0 AS seen
-      FROM documents) d ON bp.k = d.url
-""",
         "incremental_dedup": f"""
 WITH d AS (SELECT doc_id, text, doc_id % 5 = 0 AS is_new FROM documents),
 nf AS (SELECT doc_id, md5(text) AS fp FROM d WHERE is_new),
@@ -2782,13 +2580,6 @@ FROM d LEFT JOIN ehit e ON d.doc_id = e.doc_id
        LEFT JOIN nhit n ON d.doc_id = n.doc_id
 WHERE d.is_new
 """,
-        "doclen_quantiles": __import__(
-            "swiftsoup_spark.ops.corpusstats",
-            fromlist=["int_quantiles_sql"]).int_quantiles_sql(
-                "documents", "lang", "n_chars"),
-        "tfidf_topk": __import__(
-            "swiftsoup_spark.ops.corpusstats",
-            fromlist=["tfidf_topk_sql"]).tfidf_topk_sql(),
         "span_dedup": span_dedup,
         "bpe_token_count": bpe_token_count,
         "quality_topngram": """
@@ -2908,7 +2699,6 @@ SELECT t.doc_id,
          AS avg_bits_e3
 FROM t LEFT JOIN p USING (doc_id)
 """,
-        "pagerank_hosts": pagerank_hosts,
         "streaming_dedup": """
 WITH a AS (SELECT DISTINCT text FROM documents WHERE doc_id % 2 = 0),
      b AS (SELECT DISTINCT text FROM documents),
@@ -2921,14 +2711,9 @@ UNION ALL
 SELECT 'B', CAST(count(*) AS BIGINT), CAST(sum(length(text)) AS BIGINT)
 FROM bk
 """,
-        "hll_sketch": hll_oracle_sql("lang", "text", "documents",
-                                     group_alias="lang"),
         "jsonl_export": __import__(
             "swiftsoup_spark.ops.jsonl",
             fromlist=["jsonl_oracle_sql"]).jsonl_oracle_sql(),
-        "cms_sketch": __import__(
-            "swiftsoup_spark.ops.cms",
-            fromlist=["cms_sketch_sql"]).cms_sketch_sql(),
         "page_directives": f"""
 SELECT {URL_SQL} AS url,
        CASE WHEN doc_id % 3 = 0 THEN 'https://canon.test/c' || doc_id
@@ -3114,37 +2899,6 @@ SELECT doc_id, source || '.docs.test' AS host,
        CAST(3 AS BIGINT) AS n_lines, CAST(2 AS INT) AS n_removed
 FROM documents
 """,
-        "bm25": """
-WITH e AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-           FROM documents),
-tf AS (SELECT doc_id, term, count(*) AS tf FROM e
-       WHERE term != '' GROUP BY 1, 2),
-dl AS (SELECT doc_id, count(*) AS dl FROM e WHERE term != '' GROUP BY 1),
-av AS (SELECT count(*) AS n, (100 * sum(dl)) // count(*) AS avgdl_e2
-       FROM dl),
-q(query_id, terms) AS (VALUES (CAST(0 AS BIGINT), 'spark join'),
-                              (CAST(1 AS BIGINT), 'window sort merge'),
-                              (CAST(2 AS BIGINT), 'customer table')),
-qt AS (SELECT DISTINCT query_id, unnest(string_split(terms, ' ')) AS term
-       FROM q),
-dfq AS (SELECT term, count(*) AS df FROM tf
-        WHERE term IN (SELECT term FROM qt) GROUP BY 1),
-cand AS (SELECT qt.query_id, tf.doc_id,
-                greatest(length(bin(av.n + 1)) - length(bin(dfq.df)), 1)
-                * ((10000 * 88 * av.avgdl_e2 * tf.tf)
-                   // (40 * av.avgdl_e2 * tf.tf + 12 * av.avgdl_e2
-                       + 3600 * dl.dl)) AS w
-         FROM tf JOIN qt USING (term) JOIN dfq USING (term)
-              JOIN dl USING (doc_id) CROSS JOIN av),
-s AS (SELECT query_id, doc_id, CAST(sum(w) AS BIGINT) AS score
-      FROM cand GROUP BY 1, 2),
-r AS (SELECT query_id, doc_id, score,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY score DESC, doc_id) AS rank
-      FROM s)
-SELECT query_id, CAST(rank AS BIGINT) AS rank, doc_id, score
-FROM r WHERE rank <= 5
-""",
         "dedup_norm": """
 WITH v AS (SELECT doc_id * 2 AS id, text AS t FROM documents
            UNION ALL
@@ -3154,49 +2908,6 @@ SELECT md5(trim(regexp_replace(regexp_replace(lower(t),
            '[^a-z ]', ' ', 'g'), ' +', ' ', 'g'))) AS nkey,
        count(*) AS n_docs, min(id) AS rep_id
 FROM v GROUP BY 1
-""",
-        "bm25_snippets": """
-WITH e AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-           FROM documents),
-tf AS (SELECT doc_id, term, count(*) AS tf FROM e
-       WHERE term != '' GROUP BY 1, 2),
-dl AS (SELECT doc_id, count(*) AS dl FROM e WHERE term != '' GROUP BY 1),
-av AS (SELECT count(*) AS n, (100 * sum(dl)) // count(*) AS avgdl_e2
-       FROM dl),
-q(query_id, terms, t1) AS (VALUES
-    (CAST(0 AS BIGINT), 'spark join', 'spark'),
-    (CAST(1 AS BIGINT), 'window sort merge', 'window'),
-    (CAST(2 AS BIGINT), 'customer table', 'customer')),
-qt AS (SELECT DISTINCT query_id, unnest(string_split(terms, ' ')) AS term
-       FROM q),
-dfq AS (SELECT term, count(*) AS df FROM tf
-        WHERE term IN (SELECT term FROM qt) GROUP BY 1),
-cand AS (SELECT qt.query_id, tf.doc_id,
-                greatest(length(bin(av.n + 1)) - length(bin(dfq.df)), 1)
-                * ((10000 * 88 * av.avgdl_e2 * tf.tf)
-                   // (40 * av.avgdl_e2 * tf.tf + 12 * av.avgdl_e2
-                       + 3600 * dl.dl)) AS w
-         FROM tf JOIN qt USING (term) JOIN dfq USING (term)
-              JOIN dl USING (doc_id) CROSS JOIN av),
-s AS (SELECT query_id, doc_id, CAST(sum(w) AS BIGINT) AS score
-      FROM cand GROUP BY 1, 2),
-r AS (SELECT query_id, doc_id,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY score DESC, doc_id) AS rank
-      FROM s)
-SELECT r.query_id, CAST(r.rank AS BIGINT) AS rank, r.doc_id,
-       substr(d.text, greatest(strpos(d.text, q.t1) - 30, 1), 60)
-         AS snippet
-FROM r JOIN q USING (query_id) JOIN documents d ON d.doc_id = r.doc_id
-WHERE r.rank <= 5
-""",
-        "asof_snapshot": f"""
-SELECT {URL_SQL} AS url,
-       CAST(1767225600 + doc_id * 10 + 1 AS BIGINT) AS q_ts,
-       CAST(1767225600 + doc_id * 10 + least(1, doc_id % 3) AS BIGINT)
-         AS ts_epoch,
-       'v' || least(1, doc_id % 3) || ' ' || text AS content
-FROM documents
 """,
         "corpus_composition": __import__(
             "swiftsoup_spark.ops.governance",

@@ -18,9 +18,9 @@ complete deployment. On a real cluster the same invocation changes only
 a failure recomputes only buckets whose manifest rows are missing).
 
 Prints ONE JSON metrics line on stdout: docs, bytes, wall seconds,
-docs/s, MB/s, the order-independent corpus checksum, and how many
-buckets this invocation actually computed (0 = everything was already
-done — the idempotence witness).
+docs/s, MB/s, the order-independent corpus checksum with the row count
+it covers, and how many buckets this invocation actually computed
+(0 = everything was already done — the idempotence witness).
 """
 
 import argparse
@@ -60,6 +60,7 @@ def main() -> int:
     rows = manifest.agg({"row_count": "sum", "byte_count": "sum"}).collect()[0]
     n_docs = int(rows[0] or 0)
     n_bytes = int(rows[1] or 0)
+    checksum, row_count = corpus_checksum(spark, args.output)
     print(json.dumps({
         "metric": "html_to_text_extraction",
         "sf_dir": args.sf_dir,
@@ -70,7 +71,8 @@ def main() -> int:
         "docs_per_sec": round(n_docs / wall, 1),
         "buckets_total": args.buckets,
         "buckets_computed": args.buckets - already,
-        "checksum": corpus_checksum(spark, args.output),
+        "checksum": checksum,
+        "row_count": row_count,
     }))
     spark.stop()
     return 0

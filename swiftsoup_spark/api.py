@@ -5,6 +5,7 @@ layer calls the same kernel per Arrow batch."""
 
 from __future__ import annotations
 
+import codecs
 import re
 
 from swiftsoup_spark.kernel.arena import Arena, Document, Element, ELEMENT
@@ -83,6 +84,7 @@ def parse_body_fragment(html: str, base_uri: str = "") -> Document:
 
 _META_CHARSET = re.compile(
     rb"""<meta[^>]+charset\s*=\s*["']?\s*([a-zA-Z0-9_\-]+)""", re.I)
+_SURROGATE = re.compile("[\ud800-\udfff]")
 
 
 def decode_html(data: bytes) -> str:
@@ -100,12 +102,20 @@ def decode_html(data: bytes) -> str:
         # idna/punycode are hostname codecs, not charsets: idna rejects
         # the "replace" handler and punycode yields "" for ASCII input.
         # Any label that fails to decode falls back to the default too,
-        # so one bad page cannot fail a job.
+        # so one bad page cannot fail a job. utf-7 and the
+        # (raw_)unicode_escape codecs can yield a lone surrogate, which
+        # no UTF-8 consumer can encode: that decode fails as well. A
+        # UTF-8 decode with "replace" never yields one, so it is not
+        # searched.
         if enc not in ("idna", "punycode"):
             try:
-                return data.decode(enc, "replace")
+                text = data.decode(enc, "replace")
             except (LookupError, ValueError):
                 pass
+            else:
+                if (codecs.lookup(enc).name == "utf-8"
+                        or not _SURROGATE.search(text)):
+                    return text
     return data.decode("utf-8", "replace")
 
 

@@ -3152,9 +3152,11 @@ static PyObject *py_batch_extract(PyObject *self, PyObject *args) {
  * (which fuses parse+text and must bail on subtree-reordering
  * repairs), this builder MATERIALIZES nodes, so adoption agency,
  * foster parenting and frameset all run the real algorithms; it bails
- * only on: NUL bytes, non-ASCII tag/attr names (Unicode case
- * normalization parity), >MAXUNK distinct unknown tags, stack depth
- * >=MAXSTACK, and the InHeadNoscript token-re-rendering branch.
+ * only on: NUL bytes, >MAXUNK (64) distinct unknown tags, open-element
+ * depth above AB_MAXDEPTH (2048), an internal limit (a name over
+ * AB_MAXNAME bytes, a full token or formatting queue) and allocation
+ * failure.  Non-ASCII tag/attr names are lower-cased with Python's
+ * str.lower() (ab_lower_name), and the InHeadNoscript branch runs in C.
  * Byte-for-byte arena equality with HtmlTreeBuilder().parse() is
  * enforced by tests/test_arena_build.py differential fuzzing.
  *

@@ -322,9 +322,12 @@ def build_arena(html: str, base_uri: str = "", track_spans: bool = False):
     selfclosing/quirks/errors/form_controls (+ src spans when
     requested) are list-for-list, dict-for-dict identical (enforced by
     tests/test_arena_build.py differential fuzzing). It bails (returns
-    None) on NUL bytes, non-ASCII tag/attr names, >64 distinct unknown
-    tags, >=256 stack depth, and the InHeadNoscript token-re-rendering
-    branch; HTML default ParseSettings only."""
+    None) on NUL bytes, on more than 64 distinct unknown tags and on an
+    open-element depth above 2,048 (``AB_MAXDEPTH``); otherwise only
+    when an internal limit is hit (a name over 256 bytes, a full token
+    or formatting queue) or an allocation fails. Non-ASCII tag and
+    attribute names and the InHeadNoscript branch build in C. HTML
+    default ParseSettings only."""
     return _build(html, base_uri, track_spans, False)
 
 

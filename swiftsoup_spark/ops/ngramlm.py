@@ -18,8 +18,7 @@ DuckDB oracle):
   a gram scores ``floor(log2(count)) + 1`` bits — computed as
   ``length(base-2 string of count)``, a pure integer expression, NOT a
   float ``log()`` (libm rounding differs between the JVM and DuckDB in
-  the last ulp, which would break the cross-engine hash gate; the
-  pagerank op solves the same problem with fixed-point arithmetic).
+  the last ulp, which would break the cross-engine hash gate).
   Per-document outputs are exact integers: gram count, model-hit count,
   hit coverage (e4 fixed point, integer division) and mean bits per
   gram (e3 fixed point) — a monotone stand-in for negative

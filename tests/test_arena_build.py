@@ -137,6 +137,8 @@ CURATED = [
     "<p a=\"unterminated>rest",
     "<foo:bar>ns-ish</foo:bar>",
     "<p><span unknown1><unknown2>deep</unknown2></span></p>",
+    "<p><tÄg x=1>hi</tÄg></p>",
+    "<p ä=1 B=2>hi</p>",
 ]
 
 

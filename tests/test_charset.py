@@ -1,6 +1,8 @@
 """Charset detection (reference DataUtil/Document charset handling):
 BOM, <meta charset>, http-equiv content-type, UTF-8 default."""
 
+import pytest
+
 from swiftsoup_spark.api import decode_html, parse
 
 
@@ -109,3 +111,15 @@ def test_utf16_label_without_bom():
     data = b'<meta charset="utf-16"><p>x</p>'
     assert decode_html(data) == data.decode("utf-16", "replace")
     assert decode_html(data) != data.decode("utf-8")
+
+
+@pytest.mark.parametrize("label, body", [
+    ("utf-7", b"+2AA-"),
+    ("unicode_escape", rb"\ud800"),
+    ("raw_unicode_escape", rb"\ud800"),
+], ids=["utf-7", "unicode_escape", "raw_unicode_escape"])
+def test_label_decoding_to_a_lone_surrogate_falls_back_to_utf8(label, body):
+    # each codec reads body as a lone U+D800, which no UTF-8 consumer
+    # can encode: the label counts as failed
+    data = b'<meta charset="' + label.encode() + b'"><p>' + body + b"</p>"
+    assert decode_html(data) == data.decode("utf-8", "replace")

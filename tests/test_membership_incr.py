@@ -1,16 +1,12 @@
-"""Bloom membership (ops/membership.py) and incremental new-vs-corpus
-dedup (ops/dedup.incremental_dedup)."""
+"""Incremental new-vs-corpus dedup (ops/dedup.incremental_dedup)."""
 
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from swiftsoup_spark.ops.membership import (  # noqa: E402
-    M_BITS, bloom_build, bloom_probe, bloom_sql)
 from swiftsoup_spark.ops.dedup import incremental_dedup  # noqa: E402
 
 
@@ -18,35 +14,6 @@ from swiftsoup_spark.ops.dedup import incremental_dedup  # noqa: E402
 def spark():
     from swiftsoup_spark.spark.session import get_spark
     yield get_spark(master="local[4]", app="membership-test")
-
-
-def test_bloom_no_false_negatives_and_duckdb_replay(spark):
-    seen_keys = [f"k{i}" for i in range(0, 200, 2)]
-    all_keys = [f"k{i}" for i in range(200)]
-    seen = spark.createDataFrame([(k,) for k in seen_keys], "k string")
-    probe = spark.createDataFrame([(k,) for k in all_keys], "k string")
-    bloom = bloom_build(seen, "k")
-    got = {r.k: r.bloom_positive
-           for r in bloom_probe(probe, "k", bloom).collect()}
-    # Bloom guarantee: every inserted key probes positive
-    assert all(got[k] for k in seen_keys)
-    # with 100 keys * 2 hashes in 4096 bits some negatives must survive
-    assert sum(1 for k in all_keys if not got[k]) > 50
-    con = duckdb.connect()
-    con.execute("CREATE TABLE ks (k VARCHAR)")
-    con.executemany("INSERT INTO ks VALUES (?)", [(k,) for k in seen_keys])
-    con.execute("CREATE TABLE ps (k VARCHAR)")
-    con.executemany("INSERT INTO ps VALUES (?)", [(k,) for k in all_keys])
-    want = dict(con.execute(bloom_sql(
-        "SELECT k FROM ks", "SELECT k FROM ps")).fetchall())
-    assert got == want
-
-
-def test_bloom_word_bits_bounded(spark):
-    seen = spark.createDataFrame([(f"x{i}",) for i in range(50)], "k string")
-    rows = bloom_build(seen, "k").collect()
-    assert all(0 <= r.word < M_BITS // 32 for r in rows)
-    assert all(0 < r.bits <= 0xFFFFFFFF for r in rows)  # 32-bit words
 
 
 def test_incremental_verdicts(spark):

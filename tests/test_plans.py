@@ -154,22 +154,6 @@ def test_host_sample_salted_two_phase(spark, tmp_path_factory):
     assert re.search(r"keys=\[host#\d+\]", plan), plan
 
 
-def test_bm25_broadcasts_query_model(spark):
-    """BM25's (query, term, idf) model must broadcast onto the corpus
-    tf table (map-only probe), and the per-query top-k must be the
-    salted TWO-phase shape — no corpus-wide window, no cartesian."""
-    import __spark_entry__ as E
-    df = E.queries()["bm25"](spark, SF_DIR)
-    plan = _plan(df)
-    assert "BroadcastHashJoin" in plan, plan
-    assert "CartesianProduct" not in plan
-    assert "Window" not in plan, plan
-    import re
-    # phase 1 keys (query_id, __s salt), phase 2 key (query_id)
-    assert re.search(r"keys=\[query_id#\d+L?, __s#\d+", plan), plan
-    assert re.search(r"keys=\[query_id#\d+L?\]", plan), plan
-
-
 def test_template_fingerprint_fused(spark, tmp_path_factory):
     """The DFS-tag fingerprint must ride ONE fused scan→MapInArrow
     stage (html never shuffles); only (host, fp) pairs reach the

@@ -1,5 +1,5 @@
-"""Unicode scrub (ops/scrub), host boilerplate (ops/dedup), and
-integer-exact BM25 retrieval (ops/search)."""
+"""Unicode scrub (ops/scrub), host boilerplate and normalized-key
+dedup (ops/dedup)."""
 
 import os
 import sys
@@ -59,29 +59,6 @@ def test_remove_host_boilerplate(spark):
     assert out[9].n_removed == 0
 
 
-def test_bm25_ranks_relevant_docs(spark):
-    from swiftsoup_spark.ops.search import bm25_topk
-    docs = spark.createDataFrame(
-        [(0, "spark join spark join spark"),   # heavy on both terms
-         (1, "spark filter filter filter"),    # one term, once
-         (2, "sort merge window"),             # no query term
-         (3, "join join other words here")],
-        "doc_id long, text string")
-    qs = spark.createDataFrame([(0, "spark join")],
-                               "query_id long, terms string")
-    out = bm25_topk(docs, qs, k=3).orderBy("rank").collect()
-    assert [r.doc_id for r in out] == [0, 3, 1]  # doc 2 never appears
-    assert out[0].rank == 1 and out[0].score > out[1].score >= out[2].score
-
-
-def test_bm25_deterministic_across_partitionings(spark):
-    from swiftsoup_spark.ops.search import bm25_topk, queries_df
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    a = bm25_topk(docs.repartition(1), queries_df(spark), k=5).collect()
-    b = bm25_topk(docs.repartition(17), queries_df(spark), k=5).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
-
 def test_norm_exact_dedup(spark):
     from swiftsoup_spark.ops.dedup import norm_exact_dedup
     df = spark.createDataFrame(
@@ -107,18 +84,3 @@ def test_norm_key_sql_matches(spark):
         f"SELECT {norm_key_sql('t')} FROM (SELECT unnest(?) AS t)"
         " ORDER BY t", [vals]).fetchall()]
     assert got == exp
-
-
-def test_bm25_snippets_window(spark):
-    from swiftsoup_spark.ops.search import bm25_snippets
-    docs = spark.createDataFrame(
-        [(0, ("pad " * 20) + "spark sits here " + ("tail " * 20)),
-         (1, "join only doc")],
-        "doc_id long, text string")
-    qs = spark.createDataFrame([(0, "spark join")],
-                               "query_id long, terms string")
-    rows = {r.doc_id: r for r in bm25_snippets(docs, qs, k=2,
-                                               width=10).collect()}
-    assert "spark" in rows[0].snippet and len(rows[0].snippet) == 20
-    # doc 1 matched via 'join' only: locate('spark')=0 -> window from pos 1
-    assert rows[1].snippet.startswith("join only")

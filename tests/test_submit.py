@@ -61,6 +61,8 @@ def test_pyfiles_launch_and_idempotent_resume(tmp_path):
     first = _submit(zpath, out, cwd=str(tmp_path))
     assert first["n_docs"] > 0
     assert first["buckets_computed"] == 8
+    assert isinstance(first["checksum"], int)
+    assert first["row_count"] == first["n_docs"]
     again = _submit(zpath, out, cwd=str(tmp_path))
     assert again["buckets_computed"] == 0          # resume is a no-op
     assert again["checksum"] == first["checksum"]  # and changes nothing

@@ -238,3 +238,13 @@ def test_string_column_with_nulls_reads_null_as_empty():
     got = _extract_column(col, "#main")
     assert [a.to_pylist() for a in got] == [a.to_pylist() for a in want]
     assert got[0].to_pylist() == ["x", "", ""]
+
+
+def test_lone_surrogate_page_fails_no_batch():
+    """A page whose <meta charset> label decodes to a lone surrogate
+    reads as UTF-8, and the rest of its binary batch extracts as usual."""
+    from swiftsoup_spark.spark.extract import _extract_column
+
+    html = [b'<meta charset="unicode_escape"><p>\\ud800</p>', b"<p>ok</p>"]
+    got = _extract_column(pa.array(html, pa.binary()))
+    assert got[0].to_pylist() == ["\\ud800", "ok"]
